@@ -26,8 +26,16 @@ and the coarse stage reads nothing else.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from oracle_vectorsearch_example_spark.functions.vectors import (
+    arrow_list_matrix,
+    arrow_topk,
+    collect_queries,
+    pairs,
+    rank_topk,
+)
 
 
 def bq_encode_df(
@@ -89,84 +97,29 @@ def bq_topk_search(
     driver-side with the same frozen spec and broadcast in the task
     closures; per Arrow batch the scan is one XOR + one uint8 table
     lookup per byte. Integer distances → exactly reproducible ranks
-    (ties by id), so the golden needs no rounding discipline. Runs as
-    ``mapInArrow`` (r15, judge r14 #4): the packed words enter numpy as
-    one reshaped Arrow values buffer per batch instead of a per-row
-    list stack — same integer hamming math, identical ranks."""
+    (ties by id), so the golden needs no rounding discipline. Runs on
+    the shared ``arrow_topk`` kernel (``mapInArrow``): the packed words
+    enter numpy as one reshaped Arrow values buffer per batch, and the
+    distances stay int64 through the merge."""
     import numpy as np
 
-    qrows = [
-        (int(r[0]), list(r[1]))
-        for r in queries.select(query_id, query_vec).collect()
-    ]
-    qids = np.array([r[0] for r in qrows], dtype=np.int64)
-    qv = np.array([r[1] for r in qrows], dtype=np.float64)
-    nwords_arr = None
-    if len(qrows):
-        dim = qv.shape[1]
-        nwords = (dim + 63) // 64
-        qbits = np.zeros((len(qrows), nwords), dtype=np.uint64)
-        for j in range(nwords):
-            seg = qv[:, j * 64 : (j + 1) * 64] > 0
-            weights = (1 << np.arange(seg.shape[1], dtype=np.uint64))
-            qbits[:, j] = (seg.astype(np.uint64) * weights).sum(axis=1)
-        nwords_arr = qbits
-    k_, excl = k, exclude_self
+    qids, qv = collect_queries(queries, query_id, query_vec)
+    nwords = (qv.shape[1] + 63) // 64
+    qbits = np.zeros((len(qids), nwords), dtype=np.uint64)
+    for j in range(nwords):
+        seg = qv[:, j * 64 : (j + 1) * 64] > 0
+        weights = (1 << np.arange(seg.shape[1], dtype=np.uint64))
+        qbits[:, j] = (seg.astype(np.uint64) * weights).sum(axis=1)
 
-    def run(batches):
-        import pyarrow as pa
-
-        from oracle_vectorsearch_example_spark.functions.vectors import (
-            arrow_list_matrix,
-            arrow_topk_per_group,
-        )
-
+    def score(rb):
         table = _popcount_table()
-        cq: list = []
-        cb: list = []
-        ch: list = []
-        for rb in batches:
-            if rb.num_rows == 0:
-                continue
-            bids = rb.column(0).to_numpy(zero_copy_only=False).astype(np.int64)
-            w = arrow_list_matrix(rb.column(1), "int64").view(np.uint64)
-            for qi in range(len(qids)):
-                x = (w ^ nwords_arr[qi][None, :]).view(np.uint8)
-                ham = table[x].sum(axis=1).astype(np.int64)
-                b = bids
-                if excl:
-                    keep = b != qids[qi]
-                    ham, b = ham[keep], b[keep]
-                if not len(ham):
-                    continue
-                order = np.lexsort((b, ham))[:k_]
-                cq.append(np.full(len(order), qids[qi], dtype=np.int64))
-                cb.append(b[order])
-                ch.append(ham[order])
-        if cq:
-            aq, ab, ah = arrow_topk_per_group(
-                np.concatenate(cq), np.concatenate(cb), np.concatenate(ch), k_
-            )
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(aq, type=pa.int64()),
-                    pa.array(ab, type=pa.int64()),
-                    pa.array(ah, type=pa.int64()),
-                ],
-                names=["__qid", "__bid", "__ham"],
-            )
+        bids = rb.column(0).to_numpy(zero_copy_only=False).astype(np.int64)
+        w = arrow_list_matrix(rb.column(1), "int64").view(np.uint64)
+        ham = np.empty((len(qids), len(bids)), dtype=np.int64)
+        for qi in range(len(qids)):
+            ham[qi] = table[(w ^ qbits[qi][None, :]).view(np.uint8)].sum(axis=1)
+        yield pairs(qids, bids, ham)
 
-    scored = codes.select(
-        F.col(id_col).cast("long").alias(id_col), "words"
-    ).mapInArrow(run, schema="__qid long, __bid long, __ham long")
-    w = Window.partitionBy("__qid").orderBy("__ham", "__bid")
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            F.col("__qid").alias(query_id),
-            "rank",
-            F.col("__bid").alias(id_col),
-            F.col("__ham").alias("hamming"),
-        )
-    )
+    frame = codes.select(F.col(id_col).cast("long").alias(id_col), "words")
+    scored = arrow_topk(frame, score, k, exclude_self, dist_type="long")
+    return rank_topk(scored, k, query_id, id_col, dist_name="hamming")

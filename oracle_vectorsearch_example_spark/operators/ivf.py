@@ -26,12 +26,20 @@ import math
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from oracle_vectorsearch_example_spark.functions.vectors import (
+    arrow_list_matrix,
+    arrow_topk,
+    collect_queries,
+    nearest_centroids,
+    normalize_l2,
+    pairs,
+    probe_map,
+    rank_topk,
+)
 from oracle_vectorsearch_example_spark.operators.search import topk_search
 
 
 def _normalize_rows(df: DataFrame, vec_col: str) -> DataFrame:
-    from oracle_vectorsearch_example_spark.functions.vectors import normalize_l2
-
     return df.withColumn(vec_col, normalize_l2(F.col(vec_col)))
 
 
@@ -53,8 +61,7 @@ def _lloyd_kmeans(x, k: int, seed: int, max_iter: int = 25, tol: float = 1e-6):
     c = np.array(cents)
     d = x.shape[1]
     for _ in range(max_iter):
-        # ||x-c||² = ||x||² - 2x·c + ||c||²; ||x||² constant for argmin
-        assign = (-2.0 * x @ c.T + (c * c).sum(axis=1)[None, :]).argmin(axis=1)
+        assign = nearest_centroids(x, c)[:, 0]
         # vectorized per-cluster means (bincount per dim): the per-cluster
         # boolean-mask loop is O(k·n·d) python-side and dominated build
         # time at k≥512 — this is O(n·d) total
@@ -86,24 +93,18 @@ def _assign_clusters(
     reshaped Arrow values buffer and the batch passes through with just
     the cluster_id column appended — the vector payload is never
     round-tripped through pandas object cells in either direction."""
-    centroids = cmat.tolist()
+    import numpy as np
+
+    c = np.asarray(cmat, dtype=np.float64)
 
     def run(batches):
-        import numpy as np
         import pyarrow as pa
 
-        from oracle_vectorsearch_example_spark.functions.vectors import (
-            arrow_list_matrix,
-        )
-
-        c = np.array(centroids, dtype=np.float64)
-        cc = (c * c).sum(axis=1)
         for rb in batches:
             if rb.num_rows == 0:
                 continue
-            v = arrow_list_matrix(rb.column(1))
-            cl = (-2.0 * v @ c.T + cc[None, :]).argmin(axis=1).astype(np.int32)
-            yield rb.append_column("cluster_id", pa.array(cl, type=pa.int32()))
+            cl = nearest_centroids(arrow_list_matrix(rb.column(1)), c)[:, 0]
+            yield rb.append_column("cluster_id", pa.array(cl.astype(np.int32)))
 
     extra = "".join(f", {n} {t}" for n, t in payload_fields)
     schema = f"{id_col} long, {vec_col} array<double>{extra}, cluster_id int"
@@ -585,14 +586,9 @@ class IvfIndex:
                 deleted.append(name)
         return sorted(deleted)
 
-    def _nearest_clusters(self, qvec: list[float], nprobe: int) -> list[int]:
-        return self._nearest_clusters_many([qvec], nprobe)[0]
-
     def _nearest_clusters_many(self, qvecs, nprobe: int) -> list[list[int]]:
-        """Top-``nprobe`` centroid ids per query, one BLAS matmul for the
-        whole query batch. (The per-query pure-Python distance loop was
-        ~0.5 s of driver time at 16 queries × 1024 centroids — it showed
-        up as fixed 'index overhead' in every search benchmark.)"""
+        """Top-``nprobe`` centroid ids per query (nearest first), one BLAS
+        matmul for the whole query batch."""
         import numpy as np
 
         ordered = sorted(self.centroids)
@@ -601,14 +597,7 @@ class IvfIndex:
         q = np.array(qvecs, dtype=np.float64)
         nrm = np.linalg.norm(q, axis=1, keepdims=True)
         nrm[nrm == 0] = 1.0
-        q = q / nrm
-        # ||q-c||² ranking; ||q||² constant per row
-        d2 = -2.0 * q @ c.T + (c * c).sum(axis=1)[None, :]
-        nprobe_ = min(nprobe, len(cids))
-        # partial-select then exact sort of the head: O(k) + O(p log p)
-        head = np.argpartition(d2, nprobe_ - 1, axis=1)[:, :nprobe_]
-        order = np.take_along_axis(d2, head, axis=1).argsort(axis=1, kind="stable")
-        top = np.take_along_axis(head, order, axis=1)
+        top = nearest_centroids(q / nrm, c, nprobe)
         return [[int(x) for x in cids[row]] for row in top]
 
     def calibrate(
@@ -645,7 +634,7 @@ class IvfIndex:
         1-based rank of its cluster in that query's centroid ordering —
         sorted ascending. A neighbor is recalled at probe depth p iff
         its rank ≤ p, so this list IS the recall curve."""
-        qrows = queries.select(query_id, query_vec).collect()
+        qids, qmat = collect_queries(queries, query_id, query_vec)
         exact = topk_search(
             self.assignments,
             queries,
@@ -666,10 +655,9 @@ class IvfIndex:
         )
         if not hits:
             return []
-        order = {
-            r[query_id]: self._nearest_clusters(r[query_vec], len(self.centroids))
-            for r in qrows
-        }
+        order = dict(
+            zip(qids.tolist(), self._nearest_clusters_many(qmat, len(self.centroids)))
+        )
         return sorted(
             order[h[query_id]].index(h["cluster_id"]) + 1 for h in hits
         )
@@ -747,104 +735,38 @@ class IvfIndex:
         the plan. (The earlier join-then-score shape cost ~0.4 s of fixed
         join overhead per search and duplicated every scanned row per
         probing query.)"""
-        qrows = queries.select(query_id, query_vec).collect()  # queries are small by contract
-        probe_lists = self._nearest_clusters_many(
-            [list(r[query_vec]) for r in qrows], nprobe
-        )
         import numpy as np
 
-        qids = [int(r[query_id]) for r in qrows]
-        qmat_np = np.array([list(r[query_vec]) for r in qrows], dtype=np.float64)
-        nrm = np.linalg.norm(qmat_np, axis=1, keepdims=True)
+        qids, qmat = collect_queries(queries, query_id, query_vec)
+        probers = probe_map(self._nearest_clusters_many(qmat, nprobe))
+        nrm = np.linalg.norm(qmat, axis=1, keepdims=True)
         nrm[nrm == 0] = 1.0
-        qmat_list = (qmat_np / nrm).tolist()
-        # cluster -> positions (into qids/qmat) of the queries probing it
-        cluster_probers: dict[int, list[int]] = {}
-        for pos, cids in enumerate(probe_lists):
-            for cid in cids:
-                cluster_probers.setdefault(int(cid), []).append(pos)
-        probed_clusters = sorted(cluster_probers)
-        pruned = self.assignments.filter(F.col("cluster_id").isin(probed_clusters))
+        qunit = qmat / nrm
+        pruned = self.assignments.filter(F.col("cluster_id").isin(sorted(probers)))
         if predicate is not None:
             pruned = pruned.filter(
                 F.expr(predicate) if isinstance(predicate, str) else predicate
             )
         pruned = pruned.select("cluster_id", self.id_col, self.vec_col)
 
-        id_col, vec_col = self.id_col, self.vec_col
-        k_ = k
-
-        def run(batches):
-            import numpy as np
-            import pyarrow as pa
-
-            from oracle_vectorsearch_example_spark.functions.vectors import (
-                arrow_list_matrix,
-                arrow_topk_per_group,
-            )
-
-            qmat = np.array(qmat_list, dtype=np.float64)
-            qid_arr_all = np.array(qids, dtype=np.int64)
-            cq: list = []
-            cb: list = []
-            cd: list = []
-            for rb in batches:
-                if rb.num_rows == 0:
+        def score(rb):
+            cl = rb.column(0).to_numpy(zero_copy_only=False).astype(np.int64)
+            bids = rb.column(1).to_numpy(zero_copy_only=False).astype(np.int64)
+            vmat = arrow_list_matrix(rb.column(2))
+            vn = np.linalg.norm(vmat, axis=1)
+            vn[vn == 0] = 1.0
+            # partitioned scans hand us one cluster per batch almost
+            # always; group anyway so in-memory indexes stay correct
+            for cid in np.unique(cl):
+                pos = probers.get(int(cid))
+                if not pos:
                     continue
-                cl = rb.column(0).to_numpy(zero_copy_only=False).astype(np.int64)
-                bids = rb.column(1).to_numpy(zero_copy_only=False).astype(np.int64)
-                vmat = arrow_list_matrix(rb.column(2))
-                vn = np.linalg.norm(vmat, axis=1)
-                vn[vn == 0] = 1.0
-                # partitioned scans hand us one cluster per batch almost
-                # always; group anyway so in-memory indexes stay correct
-                for cid in np.unique(cl):
-                    probers = cluster_probers.get(int(cid))
-                    if not probers:
-                        continue
-                    rows = np.nonzero(cl == cid)[0]
-                    sim = (vmat[rows] @ qmat[probers].T) / vn[rows, None]
-                    d = 1.0 - sim  # shape (rows, probing queries)
-                    q_rep = np.repeat(qid_arr_all[probers][None, :], len(rows), 0)
-                    b_rep = np.repeat(bids[rows][:, None], len(probers), 1)
-                    qf, bf, df_ = q_rep.ravel(), b_rep.ravel(), d.ravel()
-                    if exclude_self:
-                        keep = bf != qf
-                        qf, bf, df_ = qf[keep], bf[keep], df_[keep]
-                    if not len(qf):
-                        continue
-                    qf, bf, df_ = arrow_topk_per_group(qf, bf, df_, k_)
-                    cq.append(qf)
-                    cb.append(bf)
-                    cd.append(df_)
-            if cq:
-                aq, ab, ad = arrow_topk_per_group(
-                    np.concatenate(cq), np.concatenate(cb), np.concatenate(cd), k_
-                )
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array(aq, type=pa.int64()),
-                        pa.array(ab, type=pa.int64()),
-                        pa.array(ad, type=pa.float64()),
-                    ],
-                    names=["__qid", "__bid", "__dist"],
-                )
+                rows = np.nonzero(cl == cid)[0]
+                sim = (vmat[rows] @ qunit[pos].T) / vn[rows, None]
+                yield pairs(qids[pos], bids[rows], (1.0 - sim).T)
 
-        scored = pruned.mapInArrow(run, schema="__qid long, __bid long, __dist double")
-        from pyspark.sql import Window
-
-        w = Window.partitionBy("__qid").orderBy(F.col("__dist").asc(), F.col("__bid").asc())
-        return (
-            scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select(
-                F.col("__qid").alias(query_id),
-                F.col("rank").cast("long"),
-                F.col("__bid").alias(self.id_col),
-                F.col("__dist").alias("distance"),
-            )
-        )
-
+        scored = arrow_topk(pruned, score, k, exclude_self)
+        return rank_topk(scored, k, query_id, self.id_col)
 
     def search_df(
         self,
@@ -867,7 +789,7 @@ class IvfIndex:
         1. queries are cluster-assigned with the SAME per-batch BLAS pass
            used at build time (``_assign_clusters`` shape), keeping the
            top-``nprobe`` centroids each → exploded probe rows
-           ``(qid, qvec, cluster_id)`` — all inside ``mapInPandas``;
+           ``(qid, qvec, cluster_id)`` — all inside ``mapInArrow``;
         2. probe rows equi-join the assignment table on ``cluster_id``
            (shuffle hash/sort-merge join — a BLOCKED join, work ∝
            Σ_c |Q_c|·|B_c|, never all-pairs);
@@ -889,12 +811,12 @@ class IvfIndex:
         when the query set is small enough that pruning would matter, it
         is small enough to ``collect``, which is exactly ``search``.
         """
+        import numpy as np
+
         ordered = sorted(self.centroids)
-        centroid_rows = [c for _, c in ordered]
-        centroid_ids = [cid for cid, _ in ordered]
-        nprobe_ = min(nprobe, len(centroid_rows))
-        k_ = k
-        id_col, vec_col = self.id_col, self.vec_col
+        c = np.array([v for _, v in ordered], dtype=np.float64)
+        cids = np.array([cid for cid, _ in ordered], dtype=np.int32)
+        nprobe_ = min(nprobe, len(cids))
 
         norm_q = _normalize_rows(
             queries.select(
@@ -905,32 +827,19 @@ class IvfIndex:
         )
 
         def assign_probes(batches):
-            import numpy as np
             import pyarrow as pa
 
-            from oracle_vectorsearch_example_spark.functions.vectors import (
-                arrow_list_matrix,
-            )
-
-            c = np.array(centroid_rows, dtype=np.float64)
-            cids = np.array(centroid_ids, dtype=np.int32)
-            cc = (c * c).sum(axis=1)
             for rb in batches:
                 if rb.num_rows == 0:
                     continue
-                q = arrow_list_matrix(rb.column(1))
-                # ||q-c||² argmin ranking; full argsort over k centroids is
-                # cheap (k ≈ √N rows driver-side) and deterministic
-                d2 = -2.0 * q @ c.T + cc[None, :]
-                top = np.argsort(d2, axis=1, kind="stable")[:, :nprobe_]
-                n = rb.num_rows
+                top = nearest_centroids(arrow_list_matrix(rb.column(1)), c, nprobe_)
                 # row i repeats nprobe_ times; Arrow take() duplicates the
                 # list rows without a Python-object round trip
-                rep = np.repeat(np.arange(n), nprobe_)
+                rep = pa.array(np.repeat(np.arange(rb.num_rows), nprobe_))
                 yield pa.RecordBatch.from_arrays(
                     [
-                        rb.column(0).take(pa.array(rep)),
-                        rb.column(1).take(pa.array(rep)),
+                        rb.column(0).take(rep),
+                        rb.column(1).take(rep),
                         pa.array(cids[top].ravel(), type=pa.int32()),
                     ],
                     names=[query_id, query_vec, "cluster_id"],
@@ -950,68 +859,21 @@ class IvfIndex:
                 F.expr(predicate) if isinstance(predicate, str) else predicate
             )
         joined = base.join(probes, "cluster_id").select(
-            query_id, query_vec, id_col, vec_col
+            query_id, query_vec, self.id_col, self.vec_col
         )
 
-        def rerank(batches):
-            import numpy as np
-            import pyarrow as pa
+        def score(rb):
+            qid_arr = rb.column(0).to_numpy(zero_copy_only=False).astype(np.int64)
+            vmat_q = arrow_list_matrix(rb.column(1))
+            bids = rb.column(2).to_numpy(zero_copy_only=False).astype(np.int64)
+            vmat = arrow_list_matrix(rb.column(3))
+            vn = np.linalg.norm(vmat, axis=1)
+            vn[vn == 0] = 1.0
+            sim = np.einsum("ij,ij->i", vmat, vmat_q) / vn  # qvec unit-norm
+            yield qid_arr, bids, 1.0 - sim
 
-            from oracle_vectorsearch_example_spark.functions.vectors import (
-                arrow_list_matrix,
-                arrow_topk_per_group,
-            )
-
-            cq: list = []
-            cb: list = []
-            cd: list = []
-            for rb in batches:
-                if rb.num_rows == 0:
-                    continue
-                qid_arr = rb.column(0).to_numpy(zero_copy_only=False).astype(np.int64)
-                vmat_q = arrow_list_matrix(rb.column(1))
-                bids = rb.column(2).to_numpy(zero_copy_only=False).astype(np.int64)
-                vmat = arrow_list_matrix(rb.column(3))
-                vn = np.linalg.norm(vmat, axis=1)
-                vn[vn == 0] = 1.0
-                sim = np.einsum("ij,ij->i", vmat, vmat_q) / vn  # qvec unit-norm
-                d = 1.0 - sim
-                if exclude_self:
-                    keep = bids != qid_arr
-                    qid_arr, bids, d = qid_arr[keep], bids[keep], d[keep]
-                if not len(qid_arr):
-                    continue
-                qf, bf, df_ = arrow_topk_per_group(qid_arr, bids, d, k_)
-                cq.append(qf)
-                cb.append(bf)
-                cd.append(df_)
-            if cq:
-                aq, ab, ad = arrow_topk_per_group(
-                    np.concatenate(cq), np.concatenate(cb), np.concatenate(cd), k_
-                )
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array(aq, type=pa.int64()),
-                        pa.array(ab, type=pa.int64()),
-                        pa.array(ad, type=pa.float64()),
-                    ],
-                    names=["__qid", "__bid", "__dist"],
-                )
-
-        scored = joined.mapInArrow(rerank, schema="__qid long, __bid long, __dist double")
-        from pyspark.sql import Window
-
-        w = Window.partitionBy("__qid").orderBy(F.col("__dist").asc(), F.col("__bid").asc())
-        return (
-            scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select(
-                F.col("__qid").alias(query_id),
-                F.col("rank").cast("long"),
-                F.col("__bid").alias(self.id_col),
-                F.col("__dist").alias("distance"),
-            )
-        )
+        scored = arrow_topk(joined, score, k, exclude_self)
+        return rank_topk(scored, k, query_id, self.id_col)
 
 
 def recall_at_k(exact: DataFrame, approx: DataFrame, query_id: str = "qid", base_id: str = "vec_id") -> float:

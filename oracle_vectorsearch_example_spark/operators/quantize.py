@@ -53,8 +53,18 @@ from __future__ import annotations
 from typing import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from oracle_vectorsearch_example_spark.functions.vectors import (
+    arrow_binary_matrix,
+    arrow_topk,
+    collect_queries,
+    nearest_centroids,
+    pairs,
+    probe_map,
+    rank_topk,
+)
 
 
 def sq8_encode_df(
@@ -112,76 +122,33 @@ def sq8_topk_search(
     exclude_self: bool = False,
 ) -> DataFrame:
     """Asymmetric cosine top-k over SQ8 codes: float queries broadcast,
-    each Arrow batch decodes int8 → float with ONE multiply and scores
-    with one BLAS matmul — the same P·Q·k candidate shuffle as
-    ``topk_search``, reading a quarter of the bytes. Returns
-    (query_id, rank, id, distance); ties break by id."""
+    each Arrow batch (``arrow_topk``, ``mapInArrow``) decodes int8 →
+    float with ONE multiply and scores with one BLAS matmul — the same
+    P·Q·k candidate shuffle as ``topk_search``, reading a quarter of the
+    bytes. Returns (query_id, rank, id, distance); ties break by id."""
     import numpy as np
 
-    qrows = [(r[0], list(r[1])) for r in queries.select(query_id, query_vec).collect()]
-    qids = np.array([r[0] for r in qrows], dtype=np.int64)
-    qmat = np.array([r[1] for r in qrows], dtype=np.float64)
+    qids, qmat = collect_queries(queries, query_id, query_vec)
     qnorm = np.linalg.norm(qmat, axis=1)
     qnorm[qnorm == 0] = 1.0
-    k_ = k
 
-    def run(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        cand: list[pd.DataFrame] = []
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            bids = pdf[id_col].to_numpy(dtype=np.int64)
-            # ONE buffer join + frombuffer + reshape — a per-row
-            # frombuffer loop measured 4M rows as Python-call-bound
-            buf = b"".join(pdf["code"])
-            v = np.frombuffer(buf, dtype=np.int8).reshape(len(pdf), -1)
-            # cosine is scale-invariant, so the decode multiply is not
-            # mathematically needed — but the sq8_topk DuckDB oracle
-            # scores the reconstructed vhat (code·scale), and a near-tie
-            # between two corpus vectors could rank differently under the
-            # two float-rounding paths. One multiply per row buys the
-            # same FP path as the oracle.
-            v = v.astype(np.float64) * pdf["scale"].to_numpy(np.float64)[:, None]
-            vn = np.linalg.norm(v, axis=1)
-            vn[vn == 0] = 1.0
-            dist = (1.0 - (v @ qmat.T) / vn[:, None] / qnorm[None, :]).T
-            rows = []
-            for qi in range(len(qids)):
-                d, b = dist[qi], bids
-                if exclude_self:
-                    keep = b != qids[qi]
-                    d, b = d[keep], b[keep]
-                if len(d) == 0:
-                    continue
-                order = np.lexsort((b, d))[:k_]
-                rows.append(
-                    pd.DataFrame(
-                        {"__qid": qids[qi], "__bid": b[order], "__dist": d[order]}
-                    )
-                )
-            if rows:
-                cand.append(pd.concat(rows))
-        if not cand:
-            return
-        allc = pd.concat(cand).sort_values(
-            ["__qid", "__dist", "__bid"], kind="mergesort"
-        )
-        yield allc.groupby("__qid", sort=False).head(k_)
+    def score(rb):
+        bids = rb.column(0).to_numpy(zero_copy_only=False).astype(np.int64)
+        v = arrow_binary_matrix(rb.column(1), np.int8)
+        # cosine is scale-invariant, so the decode multiply is not
+        # mathematically needed — but the sq8_topk DuckDB oracle
+        # scores the reconstructed vhat (code·scale), and a near-tie
+        # between two corpus vectors could rank differently under the
+        # two float-rounding paths. One multiply per row buys the
+        # same FP path as the oracle.
+        v = v.astype(np.float64) * rb.column(2).to_numpy(zero_copy_only=False)[:, None]
+        vn = np.linalg.norm(v, axis=1)
+        vn[vn == 0] = 1.0
+        dist = (1.0 - (v @ qmat.T) / vn[:, None] / qnorm[None, :]).T
+        yield pairs(qids, bids, dist)
 
-    scored = codes.select(
-        F.col(id_col).cast("long").alias(id_col), "code", "scale"
-    ).mapInPandas(run, schema="__qid long, __bid long, __dist double")
-    w = Window.partitionBy("__qid").orderBy(F.col("__dist").asc(), F.col("__bid").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            F.col("__qid").alias(query_id),
-            F.col("rank").cast("long").alias("rank"),
-            F.col("__bid").alias(id_col),
-            F.col("__dist").alias("distance"),
-        )
-    )
+    frame = codes.select(F.col(id_col).cast("long").alias(id_col), "code", "scale")
+    return rank_topk(arrow_topk(frame, score, k, exclude_self), k, query_id, id_col)
 
 
 def sq8_encode_index(index, path: str | None = None) -> DataFrame:
@@ -221,77 +188,31 @@ def sq8_ivf_search(
     vectors are never read."""
     import numpy as np
 
-    qrows = queries.select(query_id, query_vec).collect()
-    probe_lists = index._nearest_clusters_many(
-        [list(r[query_vec]) for r in qrows], nprobe
-    )
-    qids = np.array([int(r[query_id]) for r in qrows], dtype=np.int64)
-    qmat = np.array([list(r[query_vec]) for r in qrows], dtype=np.float64)
+    qids, qmat = collect_queries(queries, query_id, query_vec)
+    probers = probe_map(index._nearest_clusters_many(qmat, nprobe))
     qn = np.linalg.norm(qmat, axis=1)
     qn[qn == 0] = 1.0
     qmat = qmat / qn[:, None]
-    cluster_probers: dict[int, list[int]] = {}
-    for pos, cids in enumerate(probe_lists):
-        for cid in cids:
-            cluster_probers.setdefault(int(cid), []).append(pos)
-    probed = sorted(cluster_probers)
     id_col = index.id_col
-    k_ = k
-    qmat_list = qmat.tolist()
-    qids_list = qids.tolist()
 
-    def run(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        import numpy as np
-
-        qm = np.array(qmat_list, dtype=np.float64)
-        qid_arr = np.array(qids_list, dtype=np.int64)
-        cand = []
-        for pdf in batches:
-            if pdf.empty:
+    def score(rb):
+        cl = rb.column(0).to_numpy(zero_copy_only=False).astype(np.int64)
+        bids = rb.column(1).to_numpy(zero_copy_only=False).astype(np.int64)
+        v = arrow_binary_matrix(rb.column(2), np.int8).astype(np.float64)
+        vn = np.linalg.norm(v, axis=1)
+        vn[vn == 0] = 1.0
+        for cid in np.unique(cl):
+            pos = probers.get(int(cid))
+            if not pos:
                 continue
-            cl = pdf["cluster_id"].to_numpy(dtype=np.int64)
-            bids = pdf[id_col].to_numpy(dtype=np.int64)
-            buf = b"".join(pdf["code"])
-            v = np.frombuffer(buf, dtype=np.int8).reshape(len(pdf), -1)
-            v = v.astype(np.float64)
-            vn = np.linalg.norm(v, axis=1)
-            vn[vn == 0] = 1.0
-            for cid in np.unique(cl):
-                probers = cluster_probers.get(int(cid))
-                if not probers:
-                    continue
-                rows = np.nonzero(cl == cid)[0]
-                d = 1.0 - (v[rows] @ qm[probers].T) / vn[rows, None]
-                q_rep = np.repeat(qid_arr[probers][None, :], len(rows), 0)
-                b_rep = np.repeat(bids[rows][:, None], len(probers), 1)
-                qf, bf, df_ = q_rep.ravel(), b_rep.ravel(), d.ravel()
-                if exclude_self:
-                    keep = bf != qf
-                    qf, bf, df_ = qf[keep], bf[keep], df_[keep]
-                f = pd.DataFrame({"__qid": qf, "__bid": bf, "__dist": df_})
-                f = f.sort_values(["__qid", "__dist", "__bid"], kind="mergesort")
-                cand.append(f.groupby("__qid", sort=False).head(k_))
-        if cand:
-            allc = pd.concat(cand).sort_values(
-                ["__qid", "__dist", "__bid"], kind="mergesort"
-            )
-            yield allc.groupby("__qid", sort=False).head(k_)
+            rows = np.nonzero(cl == cid)[0]
+            d = 1.0 - (v[rows] @ qmat[pos].T) / vn[rows, None]
+            yield pairs(qids[pos], bids[rows], d.T)
 
-    pruned = codes.filter(F.col("cluster_id").isin(probed)).select(
-        "cluster_id", id_col, "code", "scale"
+    pruned = codes.filter(F.col("cluster_id").isin(sorted(probers))).select(
+        "cluster_id", id_col, "code"
     )
-    scored = pruned.mapInPandas(run, schema="__qid long, __bid long, __dist double")
-    w = Window.partitionBy("__qid").orderBy(F.col("__dist").asc(), F.col("__bid").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            F.col("__qid").alias(query_id),
-            F.col("rank").cast("long").alias("rank"),
-            F.col("__bid").alias(id_col),
-            F.col("__dist").alias("distance"),
-        )
-    )
+    return rank_topk(arrow_topk(pruned, score, k, exclude_self), k, query_id, id_col)
 
 
 # ------------------------------------------------------- product quantization
@@ -356,7 +277,6 @@ def pq_encode_df(
     extra = list(keep_cols or [])
 
     def run(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        cc = (books * books).sum(axis=2)  # (m, k)
         for pdf in batches:
             if pdf.empty:
                 continue
@@ -365,9 +285,7 @@ def pq_encode_df(
             code = np.empty((n, m), dtype=np.uint8)
             vhat_sq = np.zeros(n)
             for j in range(m):
-                xs = v[:, j * sub : (j + 1) * sub]
-                d2 = -2.0 * xs @ books[j].T + cc[j][None, :]
-                idx = d2.argmin(axis=1)
+                idx = nearest_centroids(v[:, j * sub : (j + 1) * sub], books[j])[:, 0]
                 code[:, j] = idx
                 vhat_sq += (books[j][idx] ** 2).sum(axis=1)
             out = {
@@ -401,83 +319,54 @@ def pq_topk_search(
     sub-space dot products ships in the task closure; each row's score
     is m TABLE LOOKUPS + a precomputed norm division — no decode, no
     per-row matmul (the PQ paper's asymmetric distance computation).
-    Same candidate-shuffle bound and tie rules as ``topk_search``."""
+    Same ``arrow_topk`` candidate-shuffle bound and tie rules as
+    ``topk_search``."""
     import numpy as np
 
     books = np.asarray(codebooks, dtype=np.float64)
-    m, _k256, sub = books.shape
-    qrows = [(r[0], list(r[1])) for r in queries.select(query_id, query_vec).collect()]
-    qids_l = [int(r[0]) for r in qrows]
-    qmat = np.array([r[1] for r in qrows], dtype=np.float64)
+    m = books.shape[0]
+    qids, qmat = collect_queries(queries, query_id, query_vec)
+    lut, qnorm = _adc_tables(books, qmat)
+
+    def score(rb):
+        bids = rb.column(0).to_numpy(zero_copy_only=False).astype(np.int64)
+        code = arrow_binary_matrix(rb.column(1), np.uint8).reshape(rb.num_rows, m)
+        vn = rb.column(2).to_numpy(zero_copy_only=False)
+        vn = np.where(vn == 0, 1.0, vn)
+        yield pairs(qids, bids, _adc_dist(lut, qnorm, range(len(qids)), code, vn))
+
+    frame = codes.select(F.col(id_col).cast("long").alias(id_col), "code", "vnorm")
+    return rank_topk(arrow_topk(frame, score, k, exclude_self), k, query_id, id_col)
+
+
+def _adc_tables(books, qmat):
+    """Per-query ADC lookup tables ``LUT[q, j, c] = dot(q_j, codebook_j_c)``
+    (Q, m, 256) and the query norms (zero → 1), shipped in the task
+    closure of the PQ scans."""
+    import numpy as np
+
+    m, k256, sub = books.shape
+    lut = np.zeros((len(qmat), m, k256))
+    for qi in range(len(qmat)):
+        for j in range(m):
+            lut[qi, j] = books[j] @ qmat[qi, j * sub : (j + 1) * sub]
     qn = np.linalg.norm(qmat, axis=1)
     qn[qn == 0] = 1.0
-    # LUT[q][j][c] = dot(q_j, codebook_j_c): (Q, m, 256)
-    luts = np.stack(
-        [
-            np.stack([books[j] @ qmat[qi, j * sub : (j + 1) * sub] for j in range(m)])
-            for qi in range(len(qrows))
-        ]
-    )
-    luts_l, qn_l = luts.tolist(), qn.tolist()
-    k_ = k
+    return lut, qn
 
-    def run(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        import numpy as np
 
-        lut = np.array(luts_l)  # (Q, m, 256)
-        qnorm = np.array(qn_l)
-        qid_arr = np.array(qids_l, dtype=np.int64)
-        cand: list[pd.DataFrame] = []
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            bids = pdf[id_col].to_numpy(dtype=np.int64)
-            buf = b"".join(pdf["code"])
-            code = np.frombuffer(buf, dtype=np.uint8).reshape(len(pdf), m)
-            vn = pdf["vnorm"].to_numpy(np.float64)
-            vn = np.where(vn == 0, 1.0, vn)
-            rows = []
-            for qi in range(len(qid_arr)):
-                # dot(q, v̂) = Σ_j LUT[qi, j, code[:, j]] — m gathers
-                dots = np.zeros(len(code))
-                for j in range(m):
-                    dots += lut[qi, j][code[:, j]]
-                d = 1.0 - dots / vn / qnorm[qi]
-                b = bids
-                if exclude_self:
-                    keep = b != qid_arr[qi]
-                    d, b = d[keep], b[keep]
-                if len(d) == 0:
-                    continue
-                order = np.lexsort((b, d))[:k_]
-                rows.append(
-                    pd.DataFrame(
-                        {"__qid": qid_arr[qi], "__bid": b[order], "__dist": d[order]}
-                    )
-                )
-            if rows:
-                cand.append(pd.concat(rows))
-        if not cand:
-            return
-        allc = pd.concat(cand).sort_values(
-            ["__qid", "__dist", "__bid"], kind="mergesort"
-        )
-        yield allc.groupby("__qid", sort=False).head(k_)
+def _adc_dist(lut, qnorm, qpos, code, vn):
+    """(len(qpos), n) ADC cosine distances of ``code`` rows to the queries
+    at ``qpos``: dot(q, v̂) = Σ_j LUT[q, j, code[:, j]] — m gathers."""
+    import numpy as np
 
-    scored = codes.select(
-        F.col(id_col).cast("long").alias(id_col), "code", "vnorm"
-    ).mapInPandas(run, schema="__qid long, __bid long, __dist double")
-    w = Window.partitionBy("__qid").orderBy(F.col("__dist").asc(), F.col("__bid").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            F.col("__qid").alias(query_id),
-            F.col("rank").cast("long").alias("rank"),
-            F.col("__bid").alias(id_col),
-            F.col("__dist").alias("distance"),
-        )
-    )
+    dist = np.empty((len(qpos), len(code)))
+    for i, qi in enumerate(qpos):
+        dots = np.zeros(len(code))
+        for j in range(lut.shape[1]):
+            dots += lut[qi, j][code[:, j]]
+        dist[i] = 1.0 - dots / vn / qnorm[qi]
+    return dist
 
 
 def pq_refine_topk(
@@ -501,65 +390,32 @@ def pq_refine_topk(
     stage."""
     import numpy as np
 
-    qrows = [(r[0], list(r[1])) for r in queries.select(query_id, query_vec).collect()]
-    qvecs = {int(r[0]): np.array(r[1], dtype=np.float64) for r in qrows}
-    for v in qvecs.values():
-        n = np.linalg.norm(v)
-        if n:
-            v /= n
-    qitems = sorted(qvecs.items())
-    qid_list = [q for q, _ in qitems]
-    qmat_l = [v.tolist() for _, v in qitems]
-    qpos = {q: i for i, q in enumerate(qid_list)}
+    qids, qmat = collect_queries(queries, query_id, query_vec)
+    # per-vector norm (a BLAS dot), not the axis=1 reduction: the two can
+    # differ in the last bit, and refined ranks must not move
+    n = np.array([np.linalg.norm(v) for v in qmat])
+    n[n == 0] = 1.0
+    qmat = qmat / n[:, None]
+    qpos = {int(q): i for i, q in enumerate(qids)}
 
     cand = candidates.select(
         F.col(query_id).alias("__qid"), F.col(id_col).alias("__cid")
     )
     joined = sq8_codes.join(
         F.broadcast(cand), sq8_codes[id_col] == F.col("__cid")
-    ).select("__qid", id_col, "code", "scale")
-    k_ = k
-    qpos_l = qpos
+    ).select("__qid", id_col, "code")
 
-    def run(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        import numpy as np
+    def score(rb):
+        qids_ = rb.column(0).to_numpy(zero_copy_only=False).astype(np.int64)
+        bids = rb.column(1).to_numpy(zero_copy_only=False).astype(np.int64)
+        v = arrow_binary_matrix(rb.column(2), np.int8).astype(np.float64)
+        vn = np.linalg.norm(v, axis=1)
+        vn[vn == 0] = 1.0
+        qp = np.array([qpos[int(q)] for q in qids_])
+        sims = (v * qmat[qp]).sum(axis=1) / vn  # row-wise dot, q pre-normed
+        yield qids_, bids, 1.0 - sims
 
-        qm = np.array(qmat_l)
-        cand_rows: list[pd.DataFrame] = []
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            bids = pdf[id_col].to_numpy(dtype=np.int64)
-            qids_ = pdf["__qid"].to_numpy(dtype=np.int64)
-            buf = b"".join(pdf["code"])
-            v = np.frombuffer(buf, dtype=np.int8).reshape(len(pdf), -1)
-            v = v.astype(np.float64)
-            vn = np.linalg.norm(v, axis=1)
-            vn[vn == 0] = 1.0
-            qp = np.array([qpos_l[int(q)] for q in qids_])
-            sims = (v * qm[qp]).sum(axis=1) / vn  # row-wise dot, q pre-normed
-            f = pd.DataFrame(
-                {"__qid": qids_, "__bid": bids, "__dist": 1.0 - sims}
-            ).sort_values(["__qid", "__dist", "__bid"], kind="mergesort")
-            cand_rows.append(f.groupby("__qid", sort=False).head(k_))
-        if cand_rows:
-            allc = pd.concat(cand_rows).sort_values(
-                ["__qid", "__dist", "__bid"], kind="mergesort"
-            )
-            yield allc.groupby("__qid", sort=False).head(k_)
-
-    scored = joined.mapInPandas(run, schema="__qid long, __bid long, __dist double")
-    w = Window.partitionBy("__qid").orderBy(F.col("__dist").asc(), F.col("__bid").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            F.col("__qid").alias(query_id),
-            F.col("rank").cast("long").alias("rank"),
-            F.col("__bid").alias(id_col),
-            F.col("__dist").alias("distance"),
-        )
-    )
+    return rank_topk(arrow_topk(joined, score, k), k, query_id, id_col)
 
 
 def pq_encode_index(index, codebooks, path: str | None = None) -> DataFrame:
@@ -608,86 +464,33 @@ def pq_ivf_search(
     import numpy as np
 
     books = np.asarray(codebooks, dtype=np.float64)
-    m, _k256, sub = books.shape
-    qrows = queries.select(query_id, query_vec).collect()
-    probe_lists = index._nearest_clusters_many(
-        [list(r[query_vec]) for r in qrows], nprobe
-    )
-    qids = [int(r[query_id]) for r in qrows]
-    qmat = np.array([list(r[query_vec]) for r in qrows], dtype=np.float64)
-    qn = np.linalg.norm(qmat, axis=1)
-    qn[qn == 0] = 1.0
-    # per-query (m, 256) ADC lookup tables, shipped in the task closure
-    luts = np.stack(
-        [
-            np.stack([books[j] @ qmat[qi, j * sub : (j + 1) * sub] for j in range(m)])
-            for qi in range(len(qrows))
-        ]
-    )
-    cluster_probers: dict[int, list[int]] = {}
-    for pos, cids in enumerate(probe_lists):
-        for cid in cids:
-            cluster_probers.setdefault(int(cid), []).append(pos)
-    probed = sorted(cluster_probers)
+    m = books.shape[0]
+    qids, qmat = collect_queries(queries, query_id, query_vec)
+    probers = probe_map(index._nearest_clusters_many(qmat, nprobe))
+    lut, qnorm = _adc_tables(books, qmat)
     id_col = index.id_col
     kc = k * oversample
-    luts_l, qn_l, qids_l = luts.tolist(), qn.tolist(), list(qids)
 
-    def run(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        import numpy as np
-
-        lut = np.array(luts_l)
-        qnorm = np.array(qn_l)
-        qid_arr = np.array(qids_l, dtype=np.int64)
-        cand: list[pd.DataFrame] = []
-        for pdf in batches:
-            if pdf.empty:
+    def score(rb):
+        cl = rb.column(0).to_numpy(zero_copy_only=False).astype(np.int64)
+        bids = rb.column(1).to_numpy(zero_copy_only=False).astype(np.int64)
+        code = arrow_binary_matrix(rb.column(2), np.uint8).reshape(rb.num_rows, m)
+        vn = rb.column(3).to_numpy(zero_copy_only=False)
+        vn = np.where(vn == 0, 1.0, vn)
+        for cid in np.unique(cl):
+            pos = probers.get(int(cid))
+            if not pos:
                 continue
-            cl = pdf["cluster_id"].to_numpy(dtype=np.int64)
-            bids = pdf[id_col].to_numpy(dtype=np.int64)
-            buf = b"".join(pdf["code"])
-            code = np.frombuffer(buf, dtype=np.uint8).reshape(len(pdf), m)
-            vn = pdf["vnorm"].to_numpy(np.float64)
-            vn = np.where(vn == 0, 1.0, vn)
-            for cid in np.unique(cl):
-                probers = cluster_probers.get(int(cid))
-                if not probers:
-                    continue
-                rows = np.nonzero(cl == cid)[0]
-                c = code[rows]
-                for qi in probers:
-                    dots = np.zeros(len(rows))
-                    for j in range(m):
-                        dots += lut[qi, j][c[:, j]]
-                    d = 1.0 - dots / vn[rows] / qnorm[qi]
-                    b = bids[rows]
-                    if exclude_self:
-                        keep = b != qid_arr[qi]
-                        d, b = d[keep], b[keep]
-                    if len(d) == 0:
-                        continue
-                    order = np.lexsort((b, d))[:kc]
-                    cand.append(
-                        pd.DataFrame(
-                            {"__qid": qid_arr[qi], "__bid": b[order], "__dist": d[order]}
-                        )
-                    )
-        if cand:
-            allc = pd.concat(cand).sort_values(
-                ["__qid", "__dist", "__bid"], kind="mergesort"
-            )
-            yield allc.groupby("__qid", sort=False).head(kc)
+            rows = np.nonzero(cl == cid)[0]
+            d = _adc_dist(lut, qnorm, pos, code[rows], vn[rows])
+            yield pairs(qids[pos], bids[rows], d)
 
-    pruned = pq_codes.filter(F.col("cluster_id").isin(probed)).select(
+    pruned = pq_codes.filter(F.col("cluster_id").isin(sorted(probers))).select(
         "cluster_id", id_col, "code", "vnorm"
     )
-    scored = pruned.mapInPandas(run, schema="__qid long, __bid long, __dist double")
-    w = Window.partitionBy("__qid").orderBy(F.col("__dist").asc(), F.col("__bid").asc())
-    candidates = (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= kc)
-        .select(F.col("__qid").alias(query_id), F.col("__bid").alias(id_col))
-    )
+    candidates = rank_topk(
+        arrow_topk(pruned, score, kc, exclude_self), kc, query_id, id_col
+    ).select(query_id, id_col)
     return pq_refine_topk(
         candidates, sq8_codes, queries, k=k,
         id_col=id_col, query_id=query_id, query_vec=query_vec,

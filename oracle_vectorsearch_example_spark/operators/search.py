@@ -5,18 +5,20 @@ reference's vector index (ORDER BY VECTOR_DISTANCE ... FETCH FIRST k,
 Scale design: queries are broadcast (small side); the base table is scanned
 once, partition-local. Two implementations:
 
-- ``impl="numpy"`` (default): ``mapInPandas`` scores each Arrow batch
-  against the broadcast query matrix with one BLAS matmul and keeps a
-  per-partition top-k, so the shuffle is P·Q·k candidate rows — never
-  N·Q. Spark's column higher-order functions (``zip_with``/``aggregate``)
-  run interpreted (no codegen), which makes per-pair expression math the
-  bottleneck at scale; Arrow + BLAS is 10-100× faster per row.
+- ``impl="numpy"`` (default): the shared ``arrow_topk`` kernel
+  (``mapInArrow``) scores each Arrow batch against the broadcast query
+  matrix with one BLAS matmul and keeps a per-partition top-k, so the
+  shuffle is P·Q·k candidate rows — never N·Q. Spark's column
+  higher-order functions (``zip_with``/``aggregate``) run interpreted (no
+  codegen), which makes per-pair expression math the bottleneck at scale;
+  Arrow + BLAS is 10-100× faster per row.
 - ``impl="expr"``: pure column expressions (distances.vector_distance) +
-  window top-k. JVM-only, no Python workers — the cross-check path and
-  the right choice when Python workers are unavailable.
+  a per-partition window top-k. JVM-only, no Python workers — the
+  cross-check path and the right choice when Python workers are
+  unavailable.
 
-Both break distance ties by base id, so results are identical and
-deterministic.
+Both break distance ties by base id and end in the same ``rank_topk``
+merge, so results are identical and deterministic.
 """
 
 from __future__ import annotations
@@ -28,113 +30,53 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from oracle_vectorsearch_example_spark.functions.distances import vector_distance
+from oracle_vectorsearch_example_spark.functions.vectors import (
+    arrow_list_matrix,
+    arrow_topk,
+    collect_queries,
+    pairs,
+    rank_topk,
+)
 
 _NUMPY_METRICS = ("cosine", "euclidean", "l2", "dot", "dot_product", "manhattan", "l1")
 
 
-def _numpy_candidates(
-    base: DataFrame,
-    qrows: list[tuple],
-    k: int,
-    metric: str,
-    base_id: str,
-    base_vec: str,
-    exclude_self: bool,
-) -> DataFrame:
-    """Per-partition top-k candidates: (qid, bid, dist), ≤ Q·k rows per
-    partition. Ties at the boundary kept by (dist, bid) lexicographic order
-    so the global reduce is exact. Runs as ``mapInArrow`` (r15, judge r14
-    #4): vectors enter numpy as one reshaped Arrow values buffer per
-    batch and candidates leave as Arrow arrays — no pandas frame
-    assembly on either side of the boundary; distances are the same
-    float64 BLAS math as before, so results are bit-identical."""
+def _numpy_scorer(qids, qmat, metric: str):
+    """Scorer for ``arrow_topk`` over (id, vector) batches: the (Q, B)
+    float64 BLAS distance block of each batch against the query matrix."""
     import numpy as np
 
-    qids = np.array([r[0] for r in qrows], dtype=np.int64)
-    qmat = np.array([r[1] for r in qrows], dtype=np.float64)
     m = metric.lower()
-    if m in ("cosine",):
+    if m == "cosine":
         qnorm = np.linalg.norm(qmat, axis=1)
         qnorm[qnorm == 0] = 1.0
-    k_ = k
 
-    def run(batches):
-        import pyarrow as pa
+    def score(rb):
+        bids = rb.column(0).to_numpy(zero_copy_only=False).astype(np.int64)
+        vmat = arrow_list_matrix(rb.column(1))
+        if m == "cosine":
+            vn = np.linalg.norm(vmat, axis=1)
+            vn[vn == 0] = 1.0
+            sim = (vmat @ qmat.T) / vn[:, None] / qnorm[None, :]
+            dist = 1.0 - sim.T
+        elif m in ("l2", "euclidean"):
+            vv = (vmat * vmat).sum(axis=1)
+            qq = (qmat * qmat).sum(axis=1)
+            d2 = qq[:, None] + vv[None, :] - 2.0 * (qmat @ vmat.T)
+            dist = np.sqrt(np.clip(d2, 0.0, None))
+        elif m in ("dot", "dot_product"):
+            dist = -(qmat @ vmat.T)
+        else:  # l1 / manhattan: chunk the broadcast to bound memory
+            chunks = []
+            step = max(1, 1_000_000 // max(1, qmat.shape[0] * qmat.shape[1]))
+            for i in range(0, vmat.shape[0], step):
+                chunks.append(
+                    np.abs(qmat[:, None, :] - vmat[None, i : i + step, :]).sum(-1)
+                )
+            dist = np.concatenate(chunks, axis=1)
+        yield pairs(qids, bids, dist)
 
-        from oracle_vectorsearch_example_spark.functions.vectors import (
-            arrow_list_matrix,
-        )
-
-        cq: list = []
-        cb: list = []
-        cd: list = []
-        for rb in batches:
-            if rb.num_rows == 0:
-                continue
-            bids = rb.column(0).to_numpy(zero_copy_only=False).astype(np.int64)
-            vmat = arrow_list_matrix(rb.column(1))
-            if m == "cosine":
-                vn = np.linalg.norm(vmat, axis=1)
-                vn[vn == 0] = 1.0
-                sim = (vmat @ qmat.T) / vn[:, None] / qnorm[None, :]
-                dist = 1.0 - sim.T  # (Q, B)
-            elif m in ("l2", "euclidean"):
-                vv = (vmat * vmat).sum(axis=1)
-                qq = (qmat * qmat).sum(axis=1)
-                d2 = qq[:, None] + vv[None, :] - 2.0 * (qmat @ vmat.T)
-                dist = np.sqrt(np.clip(d2, 0.0, None))
-            elif m in ("dot", "dot_product"):
-                dist = -(qmat @ vmat.T)
-            else:  # l1 / manhattan: chunk the broadcast to bound memory
-                chunks = []
-                step = max(1, 1_000_000 // max(1, qmat.shape[0] * qmat.shape[1]))
-                for i in range(0, vmat.shape[0], step):
-                    chunks.append(
-                        np.abs(qmat[:, None, :] - vmat[None, i : i + step, :]).sum(-1)
-                    )
-                dist = np.concatenate(chunks, axis=1)
-            for qi in range(len(qids)):
-                d = dist[qi]
-                b = bids
-                if exclude_self:
-                    keep = b != qids[qi]
-                    d, b = d[keep], b[keep]
-                if len(d) == 0:
-                    continue
-                # full lexsort: exact under mass ties (duplicate texts give
-                # exactly equal distances); Q is small so B·log B per batch
-                # is cheap next to the matmul
-                order = np.lexsort((b, d))[:k_]
-                cq.append(np.full(len(order), qids[qi], dtype=np.int64))
-                cb.append(b[order])
-                cd.append(d[order])
-        if not cq:
-            return
-        # reduce the partition's candidates to top-k per query: one
-        # lexsort by (qid, dist, bid), then keep rank-within-qid < k
-        from oracle_vectorsearch_example_spark.functions.vectors import (
-            arrow_topk_per_group,
-        )
-
-        aq, ab, ad = arrow_topk_per_group(
-            np.concatenate(cq), np.concatenate(cb), np.concatenate(cd), k_
-        )
-        yield pa.RecordBatch.from_arrays(
-            [
-                pa.array(aq, type=pa.int64()),
-                pa.array(ab, type=pa.int64()),
-                pa.array(ad, type=pa.float64()),
-            ],
-            names=["__qid", "__bid", "__dist"],
-        )
-
-    return (
-        base.select(F.col(base_id).cast("long").alias(base_id), base_vec)
-        # a NULL vector row would poison the batch matrix; excluded by
-        # definition (no distance is defined for it)
-        .filter(F.col(base_vec).isNotNull())
-        .mapInArrow(run, schema="__qid long, __bid long, __dist double")
-    )
+    return score
 
 
 def topk_search(
@@ -147,7 +89,6 @@ def topk_search(
     query_id: str = "qid",
     query_vec: str = "qvec",
     exclude_self: bool = False,
-    two_phase: bool = True,
     impl: str = "numpy",
     predicate=None,
 ) -> DataFrame:
@@ -169,15 +110,15 @@ def topk_search(
         base = base.filter(
             F.expr(predicate) if isinstance(predicate, str) else predicate
         )
-    order = [F.col("__dist").asc(), F.col("__bid").asc()]
     if impl == "numpy" and metric.lower() in _NUMPY_METRICS:
-        qrows = [
-            (r[0], list(r[1]))
-            for r in queries.select(query_id, query_vec).collect()
-        ]
-        scored = _numpy_candidates(
-            base, qrows, k, metric, base_id, base_vec, exclude_self
+        qids, qmat = collect_queries(queries, query_id, query_vec)
+        frame = (
+            base.select(F.col(base_id).cast("long").alias(base_id), base_vec)
+            # a NULL vector row would poison the batch matrix; excluded by
+            # definition (no distance is defined for it)
+            .filter(F.col(base_vec).isNotNull())
         )
+        scored = arrow_topk(frame, _numpy_scorer(qids, qmat, metric), k, exclude_self)
     elif impl in ("numpy", "expr"):
         q = queries.select(
             F.col(query_id).alias("__qid"), F.col(query_vec).alias("__qvec")
@@ -186,32 +127,21 @@ def topk_search(
         if exclude_self:
             joined = joined.filter(F.col(base_id) != F.col("__qid"))
         dist = vector_distance(F.col(base_vec), F.col("__qvec"), metric)
-        scored = joined.select(
-            F.col("__qid"), F.col(base_id).alias("__bid"), dist.alias("__dist")
+        # top-k within each input partition (no shuffle) before the merge
+        part_w = Window.partitionBy("__qid", F.spark_partition_id()).orderBy(
+            F.col("__dist").asc(), F.col("__bid").asc()
         )
-        if two_phase:
-            # phase 1: top-k within each input partition (no shuffle)
-            part_w = Window.partitionBy("__qid", F.spark_partition_id()).orderBy(*order)
-            scored = (
-                scored.withColumn("__pr", F.row_number().over(part_w))
-                .filter(F.col("__pr") <= k)
-                .drop("__pr")
+        scored = (
+            joined.select(
+                F.col("__qid"), F.col(base_id).alias("__bid"), dist.alias("__dist")
             )
+            .withColumn("__pr", F.row_number().over(part_w))
+            .filter(F.col("__pr") <= k)
+            .drop("__pr")
+        )
     else:
         raise ValueError(f"unknown impl {impl!r}; one of numpy, expr")
-
-    # global top-k per query (shuffle bounded by P·k rows/query)
-    final_w = Window.partitionBy("__qid").orderBy(*order)
-    return (
-        scored.withColumn("rank", F.row_number().over(final_w))
-        .filter(F.col("rank") <= k)
-        .select(
-            F.col("__qid").alias(query_id),
-            F.col("rank").cast("long").alias("rank"),
-            F.col("__bid").alias(base_id),
-            F.col("__dist").alias("distance"),
-        )
-    )
+    return rank_topk(scored, k, query_id, base_id)
 
 
 def cosine_neardup_pairs_sparse(

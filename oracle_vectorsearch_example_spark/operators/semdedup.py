@@ -34,6 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from oracle_vectorsearch_example_spark.functions.vectors import nearest_centroids
 from oracle_vectorsearch_example_spark.operators.ivf import (
     IvfIndex,
     _normalize_rows,
@@ -57,13 +58,11 @@ def _multi_assign(norm: DataFrame, centroids, id_col: str, vec_col: str, n_assig
 
         c = np.array(centroid_rows, dtype=np.float64)
         cids = np.array(centroid_ids, dtype=np.int32)
-        cc = (c * c).sum(axis=1)
         for pdf in batches:
             if pdf.empty:
                 continue
             v = np.array(list(pdf[vec_col]), dtype=np.float64)
-            d2 = -2.0 * v @ c.T + cc[None, :]
-            head = np.argpartition(d2, m - 1, axis=1)[:, :m]
+            head = nearest_centroids(v, c, m)
             yield pd.DataFrame(
                 {
                     "cluster_id": cids[head].ravel(),

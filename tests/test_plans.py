@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import re
 
+import pytest
 from pyspark.sql import functions as F
 
 from oracle_vectorsearch_example_spark.plans.inspect import (
@@ -119,6 +120,80 @@ def test_ivf_search_prunes_partitions(spark, tmp_path):
     assert m and ("cluster_id" in m.group(1)) and (
         "IN" in m.group(1).upper() or "in(" in m.group(1).lower()
     ), m.group(1) if m else plan
+
+
+@pytest.fixture(scope="module")
+def vector_indexes(spark, tmp_path_factory):
+    """A materialized IVF index plus its SQ8 / PQ / BQ code tables, so a
+    search plan holds only the search's own Python stages."""
+    from oracle_vectorsearch_example_spark.operators.bq import bq_encode_df
+    from oracle_vectorsearch_example_spark.operators.ivf import IvfIndex
+    from oracle_vectorsearch_example_spark.operators.quantize import (
+        pq_encode_index,
+        pq_train,
+        sq8_encode_index,
+    )
+
+    d = tmp_path_factory.mktemp("vector_indexes")
+    emb = read_table(spark, SF, "embeddings")
+    idx = IvfIndex.build(emb, n_clusters=8, seed=42, path=str(d / "ivf"))
+    books = pq_train(emb, m=8, k=16, seed=42)
+    return {
+        "emb": emb,
+        "idx": idx,
+        "books": books,
+        "sq8": sq8_encode_index(idx, path=str(d / "sq8")),
+        "pq": pq_encode_index(idx, books, path=str(d / "pq")),
+        "bq": bq_encode_df(emb),
+        "q": emb.filter(F.col("vec_id") < 3).select(
+            F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
+        ),
+    }
+
+
+def _search_plans():
+    from oracle_vectorsearch_example_spark.operators import bq, quantize, search
+
+    return {
+        "topk_search": (1, lambda v: search.topk_search(v["emb"], v["q"], k=5)),
+        "ivf_search": (1, lambda v: v["idx"].search(v["q"], k=5, nprobe=2)),
+        "ivf_search_df": (1, lambda v: v["idx"].search_df(v["q"], k=5, nprobe=2)),
+        "sq8_topk_search": (1, lambda v: quantize.sq8_topk_search(v["sq8"], v["q"], k=5)),
+        "sq8_ivf_search": (
+            1, lambda v: quantize.sq8_ivf_search(v["idx"], v["sq8"], v["q"], k=5, nprobe=2)
+        ),
+        "pq_topk_search": (
+            1, lambda v: quantize.pq_topk_search(v["pq"], v["q"], v["books"], k=5)
+        ),
+        "pq_refine_topk": (
+            1,
+            lambda v: quantize.pq_refine_topk(
+                v["q"].select("qid", F.col("qid").alias("vec_id")), v["sq8"], v["q"], k=5
+            ),
+        ),
+        # the PQ candidate scan feeds the SQ8 refine: two top-k stages
+        "pq_ivf_search": (
+            2,
+            lambda v: quantize.pq_ivf_search(
+                v["idx"], v["pq"], v["sq8"], v["q"], v["books"], k=5, nprobe=2
+            ),
+        ),
+        "bq_topk_search": (1, lambda v: bq.bq_topk_search(v["bq"], v["q"], k=5)),
+    }
+
+
+@pytest.mark.parametrize("name", sorted(_search_plans()))
+def test_vector_search_plans_are_one_arrow_topk(vector_indexes, name):
+    """Every vector-search path runs on the shared Arrow top-k kernel: one
+    Python map-in-Arrow ``topk`` stage per top-k in the plan and no
+    pandas map stage (``search_df``'s query-side cluster assignment is
+    its one other Arrow stage)."""
+    n_topk, build = _search_plans()[name]
+    plan = explain_str(build(vector_indexes), mode="simple")
+    assert "MapInPandas" not in plan, plan
+    udfs = re.findall(r"MapInArrow (\w+)\(", plan)
+    assert udfs.count("topk") == n_topk, plan
+    assert set(udfs) <= {"topk", "assign_probes"}, plan
 
 
 def test_sessionize_is_single_shuffle(spark):

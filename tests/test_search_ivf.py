@@ -56,10 +56,136 @@ def test_topk_impls_agree(emb, queries10):
         ], metric
 
 
-def test_topk_expr_two_phase_matches_single_phase(emb, queries10):
-    a = topk_search(emb, queries10, k=5, impl="expr", two_phase=True).collect()
-    b = topk_search(emb, queries10, k=5, impl="expr", two_phase=False).collect()
-    assert sorted(map(tuple, a)) == sorted(map(tuple, b))
+@pytest.mark.parametrize(
+    "metric,n,k,exclude_self,parts,zero_query",
+    [
+        ("l1", 40, 5, False, 5, False),  # many exact ties at the k boundary
+        ("l1", 400, 3, False, 2, False),  # dense blocks: the k-th-distance cut
+        ("l1", 40, 5, True, 3, False),  # queries are base rows: self dropped
+        ("l1", 3, 2, False, 8, False),  # more partitions than rows
+        ("l1", 6, 20, True, 2, False),  # k beyond the row count
+        ("cosine", 30, 4, False, 4, True),  # a zero-norm query: all at 1.0
+        ("hamming", 200, 6, True, 4, False),  # integer distances stay integral
+    ],
+)
+def test_arrow_topk_rank_topk_match_brute_force(
+    spark, metric, n, k, exclude_self, parts, zero_query
+):
+    """The shared kernel (per-partition ``arrow_topk`` + the one
+    ``rank_topk`` merge) returns exactly the numpy brute force: per query
+    the k smallest distances, ties broken by id, self pairs dropped."""
+    import numpy as np
+
+    from oracle_vectorsearch_example_spark.functions.vectors import (
+        arrow_list_matrix,
+        arrow_topk,
+        pairs,
+        rank_topk,
+    )
+
+    def dist(q, v):
+        """(Q, B) distances; integer-valued inputs keep every metric
+        exact, so batch-wise and brute-force scores are equal."""
+        if metric == "hamming":
+            return (q[:, None, :] != v[None, :, :]).sum(-1).astype(np.int64)
+        if metric == "cosine":  # the search paths' zero-norm convention
+            qn = np.linalg.norm(q, axis=1)
+            vn = np.linalg.norm(v, axis=1)
+            qn[qn == 0] = 1.0
+            vn[vn == 0] = 1.0
+            return 1.0 - (q @ v.T) / qn[:, None] / vn[None, :]
+        return np.abs(q[:, None, :] - v[None, :, :]).sum(-1)
+
+    rng = np.random.RandomState(n + k)
+    vecs = rng.randint(0, 3, size=(n, 4)).astype(np.float64)
+    ids = rng.permutation(np.arange(100, 100 + n)).astype(np.int64)
+    qids = ids[:4].copy()
+    qmat = vecs[:4].copy()
+    if zero_query:
+        qmat[0] = 0.0
+    base = spark.createDataFrame(
+        [(int(i), v.tolist()) for i, v in zip(ids, vecs)],
+        "vec_id long, embedding array<double>",
+    ).repartition(parts)
+
+    def score(rb):
+        bids = rb.column(0).to_numpy(zero_copy_only=False).astype(np.int64)
+        yield pairs(qids, bids, dist(qmat, arrow_list_matrix(rb.column(1))))
+
+    dist_type = "long" if metric == "hamming" else "double"
+    got = [
+        tuple(r)
+        for r in rank_topk(
+            arrow_topk(base, score, k, exclude_self, dist_type=dist_type),
+            k, "qid", "vec_id",
+        ).orderBy("qid", "rank").collect()
+    ]
+    full = dist(qmat, vecs)
+    want = []
+    for qi in np.argsort(qids):
+        keep = ids != qids[qi] if exclude_self else np.ones(n, bool)
+        order = np.lexsort((ids[keep], full[qi][keep]))[:k]
+        for rank, j in enumerate(order, 1):
+            want.append((int(qids[qi]), rank, int(ids[keep][j]), full[qi][keep][j].item()))
+    assert got == want
+    assert len(got) == len(qids) * min(k, n - exclude_self)
+    if metric == "hamming":
+        assert all(type(r[3]) is int for r in got)
+    if zero_query:
+        assert all(r[3] == 1.0 for r in got if r[0] == qids[0])
+
+
+def test_topk_partition_skips_empty_batches_and_blocks():
+    """Empty Arrow batches and empty scored blocks contribute nothing; a
+    partition that scores nothing emits no batch at all."""
+    import numpy as np
+    import pyarrow as pa
+
+    from oracle_vectorsearch_example_spark.functions.vectors import topk_partition
+
+    def rb(ids):
+        return pa.RecordBatch.from_arrays([pa.array(ids, pa.int64())], names=["id"])
+
+    def score(batch):
+        b = batch.column(0).to_numpy().astype(np.int64)
+        yield np.zeros(0, np.int64), np.zeros(0, np.int64), np.zeros(0)
+        yield np.full(len(b), 7, np.int64), b, (b % 3).astype(np.float64)
+
+    out = list(topk_partition([rb([]), rb([5, 4, 3]), rb([]), rb([2, 1])], score, 3))
+    assert len(out) == 1
+    assert out[0].to_pydict() == {
+        "__qid": [7, 7, 7], "__bid": [3, 1, 4], "__dist": [0.0, 1.0, 1.0],
+    }
+    assert list(topk_partition([rb([]), rb([])], score, 3)) == []
+    assert list(topk_partition([rb([7])], score, 3, exclude_self=True)) == []
+
+
+def test_arrow_readers_zero_copy_on_slices():
+    """A sliced batch whose nulls lie only OUTSIDE the slice still takes
+    the zero-copy path (the null probe sees only the slice); fixed-width
+    binary codes are a zero-copy view too, and ragged or null rows raise
+    instead of misaligning."""
+    import numpy as np
+    import pyarrow as pa
+
+    from oracle_vectorsearch_example_spark.functions.vectors import (
+        arrow_binary_matrix,
+        arrow_list_matrix,
+    )
+
+    lists = pa.array([[1.0, None], [3.0, 4.0], [5.0, 6.0]], pa.list_(pa.float64()))
+    sl = lists.slice(1)
+    m = arrow_list_matrix(sl)
+    assert m.tolist() == [[3.0, 4.0], [5.0, 6.0]]
+    assert np.shares_memory(m, np.frombuffer(lists.values.buffers()[1], dtype=np.float64))
+    codes = pa.array([b"\x01\x02", b"\xff\x03", b"\x04\x05"], pa.binary()).slice(1)
+    c = arrow_binary_matrix(codes, np.int8)
+    assert c.tolist() == [[-1, 3], [4, 5]]
+    assert np.shares_memory(c, np.frombuffer(codes.buffers()[2], dtype=np.int8))
+    with pytest.raises(ValueError):
+        arrow_binary_matrix(pa.array([b"\x01", b"\x02\x03"], pa.binary()), np.uint8)
+    with pytest.raises(TypeError):
+        arrow_binary_matrix(pa.array([b"\x01", None], pa.binary()), np.uint8)
 
 
 def test_ivf_recall(emb, queries10):
