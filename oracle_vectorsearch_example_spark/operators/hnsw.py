@@ -45,13 +45,14 @@ from __future__ import annotations
 
 import heapq
 import io
-import json
 import math
 from hashlib import blake2b
 from typing import Iterator
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+
+from oracle_vectorsearch_example_spark.sources.txn import Warehouse
 
 
 def _level_of(seed: int, node_id: int, m_l: float) -> int:
@@ -463,35 +464,24 @@ class ShardedHnswIndex:
             .applyInPandas(build_shard, schema="shard int, n long, blob binary")
         )
         if path is not None:
-            spark = df.sparkSession
-            graphs.write.mode("overwrite").parquet(f"{path}/graphs")
-            meta = {
-                "id_col": id_col, "vec_col": vec_col,
-                "n_shards": n_shards, "m": m,
-            }
-            spark.createDataFrame(
-                [(json.dumps(meta),)], "meta string"
-            ).coalesce(1).write.mode("overwrite").json(f"{path}/meta")
-            graphs = spark.read.parquet(f"{path}/graphs")
+            # the Warehouse log at ``path`` (sources/txn.py): one table of
+            # per-shard graphs, the build parameters in the manifest's meta
+            wh = Warehouse(df.sparkSession, path)
+            meta = {"id_col": id_col, "vec_col": vec_col, "n_shards": n_shards, "m": m}
+            wh.commit({"graphs": graphs}, meta=meta)
+            graphs = wh.read("graphs")
         else:
             graphs = graphs.cache()
         return cls(graphs, id_col, vec_col, n_shards, m)
 
     @classmethod
     def load(cls, spark: SparkSession, path: str) -> "ShardedHnswIndex":
-        meta = json.loads(spark.read.json(f"{path}/meta").collect()[0]["meta"])
-        graphs = spark.read.parquet(f"{path}/graphs")
+        wh = Warehouse(spark, path)
+        meta = wh.meta()
         return cls(
-            graphs, meta["id_col"], meta["vec_col"],
+            wh.read("graphs"), meta["id_col"], meta["vec_col"],
             int(meta["n_shards"]), int(meta["m"]),
         )
-
-    @staticmethod
-    def _meta_exists(spark: SparkSession, path: str) -> bool:
-        jvm = spark._jvm
-        conf = spark._jsc.hadoopConfiguration()
-        p = jvm.org.apache.hadoop.fs.Path(f"{path}/meta")
-        return p.getFileSystem(conf).exists(p)
 
     def search(
         self,

@@ -22,6 +22,7 @@ TARGET ACCURACY 95.
 from __future__ import annotations
 
 import math
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -37,6 +38,7 @@ from oracle_vectorsearch_example_spark.functions.vectors import (
     rank_topk,
 )
 from oracle_vectorsearch_example_spark.operators.search import topk_search
+from oracle_vectorsearch_example_spark.sources.txn import Warehouse
 
 
 def _normalize_rows(df: DataFrame, vec_col: str) -> DataFrame:
@@ -130,18 +132,25 @@ class IvfIndex:
         id_col: str,
         vec_col: str,
         path: str | None = None,
-        data_dirs: list[str] | None = None,
+        version: int | None = None,
+        tables: dict[str, str] | None = None,
     ):
         self.assignments = assignments
         self.centroids = centroids
         self.id_col = id_col
         self.vec_col = vec_col
         self.path = path
-        # snapshot: the list of data sub-dirs THIS handle reads (appends via
-        # add() land in new dirs, published in the metadata — the Warehouse
-        # manifest-swap pattern, so a handle never sees rows added after it
-        # was created; ADVICE r3 #3)
-        self.data_dirs = data_dirs or (["data"] if path else [])
+        # path-backed handles are a SNAPSHOT: the manifest version they
+        # read and its tables (name -> data dir relative to path); later
+        # publishes never change what this handle reads (ADVICE r3 #3)
+        self.version = version
+        self.tables = dict(tables or {})
+
+    @property
+    def data_dirs(self) -> list[str]:
+        """The data dirs this handle reads, relative to ``path``, oldest
+        first; each holds ``cluster_id=<c>/`` partitions."""
+        return list(self.tables.values())
 
     @property
     def payload_cols(self) -> list[str]:
@@ -245,138 +254,70 @@ class IvfIndex:
         else:
             raise ValueError(f"unknown fit {fit!r}; one of sample, mllib")
         if path:
-            # partitionBy(cluster_id): probe-time cluster filters become
-            # parquet partition pruning — the scale path. The repartition
-            # co-locates each cluster before the write so a dir holds ONE
-            # file instead of one-per-task (32 tasks × k clusters of tiny
-            # files would make probe-time listing the bottleneck).
-            data_path = f"{path.rstrip('/')}/data"
-            assigned.repartition("cluster_id").write.mode("overwrite").partitionBy(
-                "cluster_id"
-            ).parquet(data_path)
-            cls._write_meta(spark, path, centroids, id_col, vec_col)
-            assigned = spark.read.parquet(data_path)
-        return cls(assigned, centroids, id_col, vec_col, path)
+            wh = Warehouse(spark, path)
+            head = wh.current_version()
+            meta = {
+                "id_col": id_col,
+                "vec_col": vec_col,
+                "centroids": [[cid, vec] for cid, vec in centroids],
+                "tags": [],
+            }
+            return cls._write_table(
+                wh, head, assigned, "build", drop=list(wh.snapshot(head)), meta=meta
+            )
+        return cls(assigned, centroids, id_col, vec_col)
 
     # ------------------------------------------------- index persistence
     # The reference's index is a persistent database object (CREATE VECTOR
-    # INDEX); ours is a directory: data/ (assignment table, partitioned by
-    # cluster_id) + centroids.json (tiny driver-side metadata). load() needs
-    # only the path — no re-supplying centroids.
-    _META_NAME = "centroids.json"
-
-    @staticmethod
-    def _write_meta(spark, path, centroids, id_col, vec_col, data_dirs=None) -> None:
-        import json
-
-        meta = json.dumps(
-            {
-                "format": "ivf-flat-v1",
-                "id_col": id_col,
-                "vec_col": vec_col,
-                "data_dirs": data_dirs or ["data"],
-                "centroids": [[cid, vec] for cid, vec in centroids],
-            }
-        )
-        # Hadoop FS API: works on any supported filesystem (local, HDFS,
-        # object stores), not just the driver's local disk
-        jvm = spark._jvm
-        conf = spark._jsc.hadoopConfiguration()
-        p = jvm.org.apache.hadoop.fs.Path(f"{path.rstrip('/')}/{IvfIndex._META_NAME}")
-        fs = p.getFileSystem(conf)
-        out = fs.create(p, True)
-        out.write(bytearray(meta.encode("utf-8")))
-        out.close()
-
-    @staticmethod
-    def _read_meta(spark, path) -> dict:
-        import json
-
-        # wholetext text scan: one row holding the whole JSON file; avoids
-        # py4j byte-buffer round-trips and works on any Hadoop filesystem
-        row = spark.read.text(
-            f"{path.rstrip('/')}/{IvfIndex._META_NAME}", wholetext=True
-        ).collect()[0]
-        return json.loads(row[0])
-
-    @staticmethod
-    def _meta_exists(spark, path) -> bool:
-        jvm = spark._jvm
-        conf = spark._jsc.hadoopConfiguration()
-        p = jvm.org.apache.hadoop.fs.Path(f"{path.rstrip('/')}/{IvfIndex._META_NAME}")
-        return bool(p.getFileSystem(conf).exists(p))
-
-    @staticmethod
-    def _next_data_dir(spark, base: str, kind: str, known_dirs: list[str]) -> str:
-        """Name for the next versioned data dir: max numeric suffix across
-        ALL ``data-*`` dirs — on disk AND in metadata — plus one. Deriving
-        it from the handle's snapshot length alone is wrong: after a
-        compact the snapshot shrinks to one dir, so a later add would
-        regenerate ``data-add1`` and overwrite a dir that pre-compact
-        handles still read (breaking the snapshot guarantee) or that is
-        currently live. Disk is the source of truth because compact leaves
-        old dirs behind for live handles."""
-        import re
-
-        names = set(known_dirs)
-        jvm = spark._jvm
-        conf = spark._jsc.hadoopConfiguration()
-        p = jvm.org.apache.hadoop.fs.Path(base)
-        fs = p.getFileSystem(conf)
-        if fs.exists(p):
-            for status in fs.listStatus(p):
-                if status.isDirectory():
-                    names.add(status.getPath().getName())
-        mx = 0
-        for name in names:
-            m = re.fullmatch(r"data-(?:add|compact)(\d+)", name)
-            if m:
-                mx = max(mx, int(m.group(1)))
-        return f"data-{kind}{mx + 1}"
+    # INDEX); ours is a Warehouse root (sources/txn.py). Each build, add,
+    # compact and rebalance writes ONE table, partitioned by cluster_id,
+    # and publishes ONE manifest: its tables are the data dirs a handle
+    # reads, its meta holds id_col, vec_col, the centroids and the applied
+    # add tags. load() reads the head manifest on the driver — no Spark
+    # metadata job, and a crash before the publish is invisible.
 
     @classmethod
-    def load(
-        cls,
-        spark: SparkSession,
-        path: str,
-        centroids: list[tuple[int, list[float]]] | None = None,
-        id_col: str | None = None,
-        vec_col: str | None = None,
+    def _write_table(
+        cls, wh: Warehouse, base: int | None, assigned: DataFrame, kind: str,
+        drop=(), meta: dict | None = None,
     ) -> "IvfIndex":
-        """Reopen a materialized index from its directory alone; explicit
-        ``centroids``/column args override the persisted metadata (and are
-        the only option for pre-v1 indexes written without metadata). The
-        handle snapshots the data-dir list in the metadata at load time:
-        a concurrent ``add()`` publishes a NEW dir, which this handle
-        intentionally does not see (load again for the newer snapshot)."""
-        data_dirs = ["data"]
-        # only a genuinely ABSENT metadata file means "pre-v1 index";
-        # transient FS errors / corrupt JSON must propagate — silently
-        # falling back to data_dirs=['data'] would read a stale or
-        # vacuumed dir (ADVICE r4 #2)
-        if cls._meta_exists(spark, path):
-            meta = cls._read_meta(spark, path)
-        else:
-            meta = None  # pre-v1 index: no metadata file; args are required
-        if meta is not None:
-            centroids = centroids or [
-                (int(cid), [float(x) for x in vec]) for cid, vec in meta["centroids"]
-            ]
-            id_col = id_col or meta["id_col"]
-            vec_col = vec_col or meta["vec_col"]
-            data_dirs = meta.get("data_dirs", ["data"])
-        if centroids is None or id_col is None or vec_col is None:
-            raise ValueError(
-                f"index at {path!r} has no metadata; pass centroids/id_col/vec_col"
-            )
-        return cls(
-            cls._read_data_dirs(spark, path, data_dirs),
-            centroids,
-            id_col,
-            vec_col,
-            path,
-            data_dirs,
+        """Write ``assigned`` as a new table of the index and publish it on
+        top of version ``base``. partitionBy(cluster_id): probe-time
+        cluster filters become parquet partition pruning — the scale path.
+        The repartition co-locates each cluster before the write so a dir
+        holds ONE file instead of one-per-task (32 tasks × k clusters of
+        tiny files would make probe-time listing the bottleneck). The table
+        name is unique, so no writer ever writes into a dir another wrote."""
+        ((name, rel),) = wh.stage([f"{kind}-{uuid.uuid4().hex[:12]}"], base).items()
+        assigned.repartition("cluster_id").write.partitionBy("cluster_id").parquet(
+            f"{wh.root}/{rel}"
         )
+        return cls._open(wh, wh.commit_staged(base, {name: rel}, drop, meta))
+
+    @classmethod
+    def _open(cls, wh: Warehouse, version: int) -> "IvfIndex":
+        meta, tables = wh.meta(version), wh.snapshot(version)
+        return cls(
+            cls._read_data_dirs(wh.spark, wh.root, list(tables.values())),
+            [(int(cid), [float(x) for x in vec]) for cid, vec in meta["centroids"]],
+            meta["id_col"],
+            meta["vec_col"],
+            wh.root,
+            version,
+            tables,
+        )
+
+    @classmethod
+    def load(cls, spark: SparkSession, path: str) -> "IvfIndex":
+        """Reopen a materialized index from its directory alone. The handle
+        reads the snapshot of the head manifest at load time: a later
+        ``add()`` publishes a new version, which this handle intentionally
+        does not see (load again for the newer snapshot)."""
+        wh = Warehouse(spark, path)
+        version = wh.current_version()
+        if version is None:
+            raise FileNotFoundError(f"no IVF index at {path!r}: no manifest published")
+        return cls._open(wh, version)
 
     @staticmethod
     def _read_data_dirs(spark, path: str, data_dirs: list[str]) -> DataFrame:
@@ -403,23 +344,33 @@ class IvfIndex:
         fresh index and swap. Callers own id uniqueness across adds.
         Payload columns stored at build time are carried from ``df`` too.
 
-        SNAPSHOT SEMANTICS (materialized indexes): each add writes a NEW
-        versioned sub-dir (``data-addN/``) and publishes it in the
-        metadata — the Warehouse manifest-swap pattern. The RETURNED index
-        (and any subsequent ``load``) sees old + new rows; the pre-add
-        handle and any previously loaded copy keep reading exactly the
-        dirs they snapshotted, so no handle ever observes rows that
-        appeared after it was created.
+        SNAPSHOT SEMANTICS (materialized indexes): each add writes ONE new
+        table and publishes it as one manifest on top of the version this
+        handle reads. The RETURNED index (and any later ``load``) sees old
+        + new rows; the pre-add handle and any previously loaded copy keep
+        reading exactly their snapshot. Two handles that add from the same
+        snapshot both land (the later publish rebases on the earlier one);
+        an add that raced a ``rebalance`` raises ``CommitConflict``
+        instead of publishing rows assigned to replaced centroids.
 
         ``tag`` (materialized indexes) makes the add IDEMPOTENT under
-        replay: the new dir is named ``data-add-<tag>`` and an add whose
-        tag is already published in the CURRENT metadata is a no-op
-        (returns a fresh handle). This is the exactly-once contract for
+        replay: applied tags are kept in the manifest (so they survive
+        ``compact``), and an add whose tag the HEAD manifest already holds
+        is a no-op decided before any write is planned (it returns a fresh
+        handle on the head). This is the exactly-once contract for
         ``foreachBatch`` index maintenance (tag = batch id): a failed
-        micro-batch that re-runs re-derives the same deterministic dir
-        and either finds it published (skip) or rewrites the crash
-        leftover. Single-writer discipline, like Structured Streaming's
-        own sink contract."""
+        micro-batch that re-runs either finds its tag published (skip) or
+        writes afresh — a crash leftover is never published and
+        ``Warehouse.vacuum`` reclaims it. A tagged add publishes meta, so
+        it raises ``CommitConflict`` when the index moved after this
+        handle's snapshot: reload and retry. Single-writer discipline, like
+        Structured Streaming's own sink contract."""
+        if self.path:
+            wh = Warehouse(df.sparkSession, self.path)
+            if tag is not None:
+                head = wh.current_version()
+                if tag in wh.meta(head).get("tags", []):
+                    return IvfIndex._open(wh, head)  # replay: applied
         payload = self.payload_cols
         norm = _normalize_rows(
             df.select(self.id_col, self.vec_col, *payload), self.vec_col
@@ -443,70 +394,31 @@ class IvfIndex:
                 "cluster_id", F.element_at(lut, F.col("cluster_id") + 1)
             )
         if self.path:
-            base = self.path.rstrip("/")
-            spark = df.sparkSession
-            if tag is None:
-                new_dir = self._next_data_dir(spark, base, "add", self.data_dirs)
-                mode = "errorifexists"  # never clobber a dir a handle may read
-            else:
-                new_dir = f"data-add-{tag}"
-                if self._meta_exists(spark, base):
-                    published = self._read_meta(spark, base).get("data_dirs", [])
-                    if new_dir in published:
-                        return IvfIndex.load(spark, base)  # replay: applied
-                # crash leftover (written, never published): content is
-                # deterministic for the tag, rewriting is safe
-                mode = "overwrite"
-            assigned.repartition("cluster_id").write.mode(mode).partitionBy(
-                "cluster_id"
-            ).parquet(f"{base}/{new_dir}")
-            new_dirs = [*self.data_dirs, new_dir]
-            # publish: metadata swap makes the new dir visible to future
-            # load()s; existing handles keep their snapshotted dir list
-            self._write_meta(
-                df.sparkSession, base, self.centroids, self.id_col, self.vec_col, new_dirs
-            )
-            new_assignments = self._read_data_dirs(df.sparkSession, base, new_dirs)
-            return IvfIndex(
-                new_assignments, self.centroids, self.id_col, self.vec_col, self.path, new_dirs
-            )
+            tags = wh.meta(self.version).get("tags", [])
+            meta = None if tag is None else {"tags": [*tags, tag]}
+            return IvfIndex._write_table(wh, self.version, assigned, "add", meta=meta)
         new_assignments = self.assignments.unionByName(assigned)
         return IvfIndex(
             new_assignments, self.centroids, self.id_col, self.vec_col, self.path
         )
 
     def compact(self) -> "IvfIndex":
-        """Fold the versioned add-dirs back into one data dir — the
-        maintenance pass after many ``add()`` cycles (each add is a new
-        dir; many small dirs mean many small files and long listings).
+        """Fold the add tables back into one — the maintenance pass after
+        many ``add()`` cycles (each add is a new table; many small dirs
+        mean many small files and long listings).
 
-        Same snapshot discipline as ``add``: the merged copy is written to
-        a fresh dir (``data-compactN``), then the metadata swaps to point
-        at it alone — existing handles keep their dir-list snapshot;
-        fresh ``load()``s see the compacted index. Old dirs are left on
-        disk for those handles (a vacuum policy owns deleting them, as in
-        the Warehouse)."""
-        if not self.path:
-            return self  # in-memory index: nothing to fold
-        if len(self.data_dirs) == 1:
-            return self
-        base = self.path.rstrip("/")
-        spark = self.assignments.sparkSession
-        new_dir = self._next_data_dir(spark, base, "compact", self.data_dirs)
-        # errorifexists: never clobber a dir another handle may read
-        self.assignments.repartition("cluster_id").write.mode(
-            "errorifexists"
-        ).partitionBy("cluster_id").parquet(f"{base}/{new_dir}")
-        self._write_meta(
-            spark, base, self.centroids, self.id_col, self.vec_col, [new_dir]
-        )
-        return IvfIndex(
-            self._read_data_dirs(spark, base, [new_dir]),
-            self.centroids,
-            self.id_col,
-            self.vec_col,
-            self.path,
-            [new_dir],
+        Same snapshot discipline as ``add``: the merged copy is written as
+        a new table and published in one manifest that retires (``drop=``)
+        the tables it read — existing handles keep their snapshot; fresh
+        ``load()``s see the compacted index. An add published meanwhile
+        survives (the compaction rebases on it). The retired dirs stay on
+        disk for older handles until ``Warehouse(spark, path).expire()``
+        and ``vacuum()`` reclaim them."""
+        if not self.path or len(self.tables) <= 1:
+            return self  # in-memory, or nothing to fold
+        wh = Warehouse(self.assignments.sparkSession, self.path)
+        return IvfIndex._write_table(
+            wh, self.version, self.assignments, "compact", drop=list(self.tables)
         )
 
     def rebalance(
@@ -525,11 +437,12 @@ class IvfIndex:
         reading worse at the same nprobe. Rebalance = one fresh
         hash-sampled KMeans fit + one full reassignment pass over the
         snapshot this handle reads (payload columns carried through),
-        published with the ``compact()`` snapshot discipline: new data
-        dir + metadata swap with the NEW centroids; existing handles keep
-        their dir-list/centroid snapshot, fresh ``load()``s see the
-        rebalanced index; ``vacuum`` reclaims the old dirs later.
-        In-memory indexes just return the freshly built index."""
+        published as one manifest with the NEW centroids that drops every
+        table of that snapshot; existing handles keep their snapshot,
+        fresh ``load()``s see the rebalanced index, and an add that raced
+        it raises ``CommitConflict``. ``expire`` + ``vacuum`` reclaim the
+        old dirs later. In-memory indexes just return the freshly built
+        index."""
         src = self.assignments.drop("cluster_id")
         fresh = IvfIndex.build(
             src,
@@ -542,49 +455,12 @@ class IvfIndex:
         )
         if not self.path:
             return fresh
-        base = self.path.rstrip("/")
-        spark = self.assignments.sparkSession
-        new_dir = self._next_data_dir(spark, base, "rebal", self.data_dirs)
-        fresh.assignments.repartition("cluster_id").write.mode(
-            "errorifexists"
-        ).partitionBy("cluster_id").parquet(f"{base}/{new_dir}")
-        self._write_meta(
-            spark, base, fresh.centroids, self.id_col, self.vec_col, [new_dir]
+        wh = Warehouse(self.assignments.sparkSession, self.path)
+        meta = {"centroids": [[cid, vec] for cid, vec in fresh.centroids]}
+        return IvfIndex._write_table(
+            wh, self.version, fresh.assignments, "rebalance",
+            drop=list(self.tables), meta=meta,
         )
-        return IvfIndex(
-            self._read_data_dirs(spark, base, [new_dir]),
-            fresh.centroids,
-            self.id_col,
-            self.vec_col,
-            self.path,
-            [new_dir],
-        )
-
-    def vacuum(self) -> list[str]:
-        """Delete data dirs on disk that the CURRENT metadata no longer
-        references (left behind by ``compact`` for then-live handles) —
-        the same split of responsibilities as ``Warehouse.vacuum``.
-        Returns the deleted dir names. Only safe once no handle created
-        before the last compact is still in use; the caller owns that
-        window, exactly like any snapshot store's retention policy."""
-        if not self.path:
-            return []
-        meta = self._read_meta(self.assignments.sparkSession, self.path)
-        live = set(meta.get("data_dirs", ["data"]))
-        spark = self.assignments.sparkSession
-        jvm = spark._jvm
-        conf = spark._jsc.hadoopConfiguration()
-        base = jvm.org.apache.hadoop.fs.Path(self.path.rstrip("/"))
-        fs = base.getFileSystem(conf)
-        deleted: list[str] = []
-        for status in fs.listStatus(base):
-            if not status.isDirectory():
-                continue
-            name = status.getPath().getName()
-            if (name == "data" or name.startswith("data-")) and name not in live:
-                fs.delete(status.getPath(), True)
-                deleted.append(name)
-        return sorted(deleted)
 
     def _nearest_clusters_many(self, qvecs, nprobe: int) -> list[list[int]]:
         """Top-``nprobe`` centroid ids per query (nearest first), one BLAS

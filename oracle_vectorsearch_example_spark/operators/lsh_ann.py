@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from oracle_vectorsearch_example_spark.functions.distances import cosine_distance
+from oracle_vectorsearch_example_spark.sources.txn import Warehouse
 
 
 def _lsh_signatures(
@@ -123,53 +124,42 @@ class CosineLshIndex:
         )
 
     # ------------------------------------------------- persistence (r4)
-    # Same self-describing-directory convention as IvfIndex: data/ holds
-    # the assignment table partitioned by table (probe filters prune the
-    # partition a query's bucket lives in), planes.json holds the tiny
-    # driver-side metadata. load() needs only the path.
-    _META_NAME = "planes.json"
+    # Same log-backed layout as IvfIndex: ``path`` is a Warehouse root
+    # (sources/txn.py) holding one table, the assignment table partitioned
+    # by table (probe filters prune the partition a query's bucket lives
+    # in); the manifest's meta holds the column names and the hyperplanes.
+    # load() needs only the path and reads the manifest on the driver.
+    _TABLE = "lsh"
 
     def save(self, path: str) -> "CosineLshIndex":
-        """Materialize the index at ``path``; returns a handle backed by
-        the persisted table (reopen later with :meth:`load`)."""
-        import json
-
-        spark = self.assignments.sparkSession
-        base = path.rstrip("/")
+        """Materialize the index at ``path`` (replacing any index saved
+        there) as one manifest publish; returns a handle backed by the
+        persisted table (reopen later with :meth:`load`)."""
+        wh = Warehouse(self.assignments.sparkSession, path)
+        base = wh.current_version()
+        written = wh.stage([self._TABLE], base)
         self.assignments.write.mode("overwrite").partitionBy("table").parquet(
-            f"{base}/data"
+            f"{wh.root}/{written[self._TABLE]}"
         )
-        meta = json.dumps(
-            {
-                "format": "lsh-cosine-v1",
-                "id_col": self.id_col,
-                "vec_col": self.vec_col,
-                "planes": self.planes.tolist(),
-            }
-        )
-        jvm = spark._jvm
-        conf = spark._jsc.hadoopConfiguration()
-        p = jvm.org.apache.hadoop.fs.Path(f"{base}/{self._META_NAME}")
-        fs = p.getFileSystem(conf)
-        out = fs.create(p, True)
-        out.write(bytearray(meta.encode("utf-8")))
-        out.close()
+        meta = {
+            "id_col": self.id_col,
+            "vec_col": self.vec_col,
+            "planes": self.planes.tolist(),
+        }
+        wh.commit_staged(base, written, meta=meta)
         return CosineLshIndex(
-            spark.read.parquet(f"{base}/data"), self.planes, self.id_col, self.vec_col
+            wh.read(self._TABLE), self.planes, self.id_col, self.vec_col
         )
 
     @classmethod
     def load(cls, spark, path: str) -> "CosineLshIndex":
         """Reopen a saved index from its directory alone."""
-        import json
-
         import numpy as np
 
-        base = path.rstrip("/")
-        row = spark.read.text(f"{base}/{cls._META_NAME}", wholetext=True).collect()[0]
-        meta = json.loads(row[0])
+        wh = Warehouse(spark, path)
+        meta = wh.meta()
         return cls(
-            spark.read.parquet(f"{base}/data"),
+            wh.read(cls._TABLE),
             np.array(meta["planes"], dtype=np.float64),
             meta["id_col"],
             meta["vec_col"],

@@ -25,6 +25,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from oracle_vectorsearch_example_spark.sources.txn import Warehouse
+
 DEFAULT_N = 4_000_000
 DEFAULT_DIM = 64
 DEFAULT_CENTERS = 1024
@@ -192,7 +194,7 @@ def ensure_ann_index(
         _fixture_dir(base_dir, n, dim, n_centers, noise, seed)
         + f"__ivf_k{n_clusters}_s{index_seed}"
     )
-    if IvfIndex._meta_exists(spark, path):
+    if Warehouse(spark, path).current_version() is not None:
         return IvfIndex.load(spark, path)
     return IvfIndex.build(
         fixture,
@@ -229,7 +231,7 @@ def ensure_hnsw_index(
         _fixture_dir(base_dir, n, dim, n_centers, noise, seed)
         + f"__hnsw_s{n_shards}_m{m}_efc{ef_construction}_s{index_seed}"
     )
-    if ShardedHnswIndex._meta_exists(spark, path):
+    if Warehouse(spark, path).current_version() is not None:
         return ShardedHnswIndex.load(spark, path)
     return ShardedHnswIndex.build(
         fixture,

@@ -16,19 +16,36 @@ metadata tree, re-implemented here from first principles, minimally):
 - a commit publishes ``_log/<N 20-digit>.json`` mapping every table to its
   current data dir (unchanged tables carry forward from the parent
   manifest, so a commit of a subset is still a full-snapshot manifest);
-- the publish uses HDFS ``create(overwrite=False)`` — atomic
-  create-if-absent — so two racing committers cannot both win version N;
-  the loser re-reads the new head and retries on top of it (optimistic
-  concurrency);
+- the publish writes the manifest to a temp file and claims version N by
+  renaming it into place — create-if-absent, so two racing committers
+  cannot both win version N and a crash never leaves a half-written
+  manifest; the loser re-reads the new head and retries on top of it
+  (optimistic concurrency);
 - readers resolve the highest-numbered manifest and read only the data
   dirs it names. A crash before publish leaves orphan ``v<N>`` dirs that
   no reader can see; :meth:`vacuum` removes them.
 
+Manifests also carry a ``meta`` map (carried forward like ``tables``; a
+manifest written before it existed reads as ``{}``). It is how the
+persisted vector indexes publish: ``IvfIndex`` (centroids, column names,
+applied ``add`` tags; one table per build/add/compact/rebalance),
+``CosineLshIndex`` (hyperplanes) and ``ShardedHnswIndex`` (shard count,
+``m``) each keep their index under a Warehouse root and publish every
+change as one manifest — :meth:`Warehouse.stage` names the version dirs,
+the index writes its own partition layout into them, and
+:meth:`Warehouse.commit_staged` publishes. A committer that lost the race
+rebases only when neither side changed ``meta`` and every table it drops
+is still live; otherwise it raises :class:`CommitConflict` (Delta's
+metadata-change rule: an ``add`` never lands on centroids a ``rebalance``
+replaced, and two compactions never both publish the rows they folded).
+
 Scale notes: the manifest holds one path per table (not per file), so it
 stays tiny at any data size; listing ``_log`` is O(commits) — fine for
 pipeline cadence (compaction/checkpointing is the known extension and out
-of scope). ``create(overwrite=False)`` is atomic on HDFS and local
-filesystems; on S3-family object stores the real systems use a
+of scope). The rename claim is atomic on HDFS; the local filesystem's
+rename replaces a target, so there the claim checks first (atomic within
+one process, like its ``create(overwrite=False)``); on S3-family object
+stores the real systems use a
 conditional-PUT or a coordination service — same contract, different
 primitive (documented limitation, as in open-source Delta's
 ``LogStore`` abstraction).
@@ -37,6 +54,7 @@ primitive (documented limitation, as in open-source Delta's
 from __future__ import annotations
 
 import json
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -154,7 +172,13 @@ class Warehouse:
         # is valid for the lifetime of this handle — memoizing is
         # consistent by construction and removes a metadata read per
         # snapshot()/read()/tables() call (r15 opt, guide §5 driver
-        # discipline: an ingest was paying ~8 manifest reads)
+        # discipline: an ingest was paying ~8 manifest reads).
+        # Caveat: only THIS handle's expire() evicts. A version another
+        # handle expired stays readable here from the memo, and once
+        # vacuum() has run, reading its tables fails with an opaque
+        # data-file FileNotFound instead of the clean LookupError — so
+        # keep expire/vacuum to one handle (the single-writer posture),
+        # or reopen the Warehouse after a cross-handle expire.
         self._manifest_cache: dict[int, dict] = {}
 
     # ------------------------------------------------------------ log I/O
@@ -214,20 +238,31 @@ class Warehouse:
         self._manifest_cache[version] = manifest
         return manifest
 
+    def _manifest(self, version: int | None) -> dict:
+        return {} if version is None else self._read_manifest(version)
+
     def _publish(self, version: int, manifest: dict) -> bool:
-        """Atomically create manifest ``version``; False if it already exists."""
+        """Atomically create manifest ``version``; False if it already exists.
+
+        The bytes go to a temp file first and are claimed by a rename, so
+        a crash mid-write leaves only a temp file that no reader lists —
+        never a truncated manifest. ``rename`` refuses an existing target
+        on HDFS (atomic claim); the local filesystem's rename would
+        replace it, so the claim checks first — the same check-then-act
+        the local ``create(overwrite=False)`` does."""
         p = self._hpath(self._manifest_path(version))
         self._fs.mkdirs(p.getParent())
-        try:
-            out = self._fs.create(p, False)  # overwrite=False: atomic claim
-        except Exception as exc:  # py4j wraps FileAlreadyExistsException
-            if "exist" in str(exc).lower():
-                return False
-            raise
+        tmp = self._hpath(
+            f"{self._log_dir()}/.{version:020d}.{uuid.uuid4().hex}.tmp"
+        )
+        out = self._fs.create(tmp, False)
         try:
             out.write(bytearray(json.dumps(manifest).encode("utf-8")))
         finally:
             out.close()
+        if self._fs.exists(p) or not self._fs.rename(tmp, p):
+            self._fs.delete(tmp, False)
+            return False
         return True
 
     # ------------------------------------------------------------ public
@@ -239,48 +274,47 @@ class Warehouse:
         """table → data dir (relative to root) at ``version`` (default head)."""
         if version is None:
             version = self.current_version()
-            if version is None:
-                return {}
-        return dict(self._read_manifest(version)["tables"])
+        return dict(self._manifest(version).get("tables", {}))
+
+    def meta(self, version: int | None = None) -> dict:
+        """The ``meta`` map at ``version`` (default head); ``{}`` for an
+        empty log or a manifest written before manifests carried one."""
+        if version is None:
+            version = self.current_version()
+        return dict(self._manifest(version).get("meta", {}))
+
+    def stage(self, tables, base: int | None) -> dict[str, str]:
+        """table → data dir (relative to root) to write for a commit
+        planned on version ``base`` (None: an empty log). Nothing written
+        there is visible until :meth:`commit_staged` publishes it."""
+        return {name: f"{self._DATA}/{name}/v{(base or 0) + 1}" for name in tables}
 
     def commit(
         self,
         tables: dict[str, DataFrame],
         max_retries: int = 5,
         drop: list[str] | tuple[str, ...] = (),
+        meta: dict | None = None,
     ) -> int:
         """Write ``tables`` and publish them in ONE atomic step.
 
         All data jobs run first (expensive, invisible); only the final tiny
         manifest create is the commit point. Returns the new version.
-
-        ``drop``: table names to REMOVE from the new snapshot in the same
-        atomic step (compaction: publish the folded table and retire its
-        inputs in one manifest swap). Dropped tables stay readable at
-        earlier versions (time travel) until ``vacuum`` after manifest
-        retention expires; dropping an unknown name is a no-op.
+        ``drop`` and ``meta`` as in :meth:`commit_staged`.
         """
-        if not tables:
-            raise ValueError("commit of zero tables")
-        overlap = set(drop) & set(tables)
-        if overlap:
-            raise ValueError(f"tables both written and dropped: {sorted(overlap)}")
         head = self.current_version()
-        version = (head or 0) + 1
+        written = self.stage(tables, head)
         # 1. write data dirs for the new version — not yet visible.
         # Independent tables write CONCURRENTLY (guide §2.6: Spark's
         # scheduler happily runs several jobs at once; a commit of 2-4
         # small tables was paying each job's scheduling latency serially,
         # and the tail tasks of one write leave executors idle for the
         # next). Atomicity is unchanged — nothing is visible until the
-        # single manifest create below.
-        written = {
-            name: f"{self._DATA}/{name}/v{version}" for name in tables
-        }
+        # single manifest create in commit_staged.
         if len(tables) == 1:
             ((name, df),) = tables.items()
             df.write.mode("overwrite").parquet(f"{self.root}/{written[name]}")
-        else:
+        elif tables:
             from concurrent.futures import ThreadPoolExecutor
 
             def _write(item):
@@ -291,29 +325,74 @@ class Warehouse:
                 # list() drains the iterator so the first raised exception
                 # propagates (a failed write must fail the commit)
                 list(pool.map(_write, tables.items()))
-        # 2. publish: carry forward unchanged tables, claim the version file
+        # 2. publish
+        return self.commit_staged(head, written, drop, meta, max_retries)
+
+    def commit_staged(
+        self,
+        base: int | None,
+        written: dict[str, str],
+        drop: list[str] | tuple[str, ...] = (),
+        meta: dict | None = None,
+        max_retries: int = 5,
+    ) -> int:
+        """Publish data dirs already written where :meth:`stage` named
+        them for ``base``, as ONE manifest. Returns the new version.
+
+        Unchanged tables carry forward from the parent manifest; ``meta``
+        keys overwrite the parent's ``meta`` the same way.
+
+        ``drop``: table names to REMOVE from the new snapshot in the same
+        atomic step (compaction: publish the folded table and retire its
+        inputs in one manifest swap). Dropped tables stay readable at
+        earlier versions (time travel) until ``vacuum`` after manifest
+        retention expires; dropping an unknown name is a no-op.
+
+        Lost race: rebase on the new head (renaming the data dirs to the
+        new version) — unless ``meta`` is given, the new head's ``meta``
+        differs from ``base``'s, or a table this commit drops is gone;
+        then raise :class:`CommitConflict`, since the data was planned
+        against a state that no longer holds.
+        """
+        if not written:
+            raise ValueError("commit of zero tables")
+        overlap = set(drop) & set(written)
+        if overlap:
+            raise ValueError(f"tables both written and dropped: {sorted(overlap)}")
+        planned = self._manifest(base)
+        head, parent, version = base, planned, (base or 0) + 1
         for _ in range(max_retries):
-            parent = {} if head is None else self.snapshot(head)
-            merged = {**parent, **written}
+            merged = {**parent.get("tables", {}), **written}
             for name in drop:
                 merged.pop(name, None)
             manifest = {
                 "version": version,
                 "parent": head,
                 "tables": merged,
+                "meta": {**parent.get("meta", {}), **(meta or {})},
             }
             if self._publish(version, manifest):
                 self._manifest_cache[version] = manifest
                 return version
-            # lost the race: rebase on the new head. Data dirs are keyed by
-            # OUR version number, so a retry must rewrite them under the new
-            # number only if the number changed — it did (head moved).
             head = self.current_version()
+            parent = self._manifest(head)
+            gone = [
+                t for t in drop
+                if t in planned.get("tables", {}) and t not in parent.get("tables", {})
+            ]
+            if meta or gone or parent.get("meta", {}) != planned.get("meta", {}):
+                raise CommitConflict(
+                    f"version {head} was published after version {base}, "
+                    "which this commit was planned on, and "
+                    + (f"already dropped {gone}" if gone else "one of them changes meta")
+                )
+            # rebase: data dirs are keyed by OUR version number, so move
+            # them under the new number when the head moved past it
             new_version = (head or 0) + 1
             if new_version != version:
                 moved = {}
-                for name in tables:
-                    src, dst = written[name], f"{self._DATA}/{name}/v{new_version}"
+                for name, src in written.items():
+                    dst = f"{self._DATA}/{name}/v{new_version}"
                     self._fs.rename(
                         self._hpath(f"{self.root}/{src}"),
                         self._hpath(f"{self.root}/{dst}"),

@@ -159,14 +159,16 @@ def index_documents_stream(
     ``index_path`` via ``add(tag=batch_id)`` — the streaming analog of
     Oracle maintaining ``idx_doc_chunks_embedding`` under DML
     (01_pdf_to_vector.sql:93-97): centroids stay frozen, each batch
-    publishes one new snapshot dir, searches on fresh ``load()`` handles
+    writes one new table and publishes it as one manifest of the index's
+    Warehouse log (with its tag), searches on fresh ``load()`` handles
     see the new chunks immediately.
 
     The index must already exist (built from a seed corpus — KMeans
     centroids need data; ``plans.pipeline.build_chunk_index`` with
-    ``path=``). Exactly-once: the batch-id tag makes replayed batches
-    no-ops (see ``IvfIndex.add``), so a crash between Spark's offset
-    commit and the metadata publish cannot duplicate rows. Returns the
+    ``path=``). Exactly-once: the batch-id tag is published in the same
+    manifest as the batch's rows and survives ``compact``, so a replayed
+    batch is a no-op (see ``IvfIndex.add``) and a crash between Spark's
+    offset commit and the publish cannot duplicate rows. Returns the
     ``DataStreamWriter`` — the caller sets ``checkpointLocation`` /
     trigger and ``start()``s (same contract as any foreachBatch sink)."""
     from oracle_vectorsearch_example_spark.operators.ivf import IvfIndex

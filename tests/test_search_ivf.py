@@ -19,6 +19,7 @@ from oracle_vectorsearch_example_spark.operators.search import (
     topk_search,
 )
 from oracle_vectorsearch_example_spark.sources.io import read_table
+from oracle_vectorsearch_example_spark.sources.txn import Warehouse
 
 SF = "/root/testdata/sf0.001"
 
@@ -290,7 +291,7 @@ def test_search_df_no_driver_collect(emb, queries10):
 def test_ivf_materialized_roundtrip(emb, queries10, tmp_path):
     path = str(tmp_path / "ivf")
     idx = IvfIndex.build(emb, n_clusters=8, seed=42, path=path)
-    loaded = IvfIndex.load(emb.sparkSession, path, idx.centroids)
+    loaded = IvfIndex.load(emb.sparkSession, path)
     a = idx.search(queries10, k=5, nprobe=4).collect()
     b = loaded.search(queries10, k=5, nprobe=4).collect()
     assert sorted(map(tuple, a)) == sorted(map(tuple, b))
@@ -553,8 +554,8 @@ def test_ivf_incremental_add_materialized(spark, tmp_path):
 
 
 def test_ivf_add_snapshot_isolation(spark, tmp_path):
-    """add() on a path-backed index writes a NEW versioned dir and swaps
-    the metadata (Warehouse pattern, ADVICE r3 #3): the pre-add handle and
+    """add() on a path-backed index writes a NEW versioned dir and publishes
+    a manifest (Warehouse log, ADVICE r3 #3): the pre-add handle and
     a copy loaded before the add keep seeing exactly their snapshot, while
     the returned index and fresh load()s see old + new."""
     from oracle_vectorsearch_example_spark.operators.ivf import IvfIndex
@@ -570,7 +571,8 @@ def test_ivf_add_snapshot_isolation(spark, tmp_path):
 
     grown = idx.add(second)
     assert grown.assignments.count() == emb.count()
-    assert grown.data_dirs == ["data", "data-add1"]
+    assert len(grown.data_dirs) == 2 and grown.data_dirs[0] == idx.data_dirs[0]
+    assert grown.version == idx.version + 1
     # both pre-add handles still see ONLY the original snapshot
     assert idx.assignments.count() == n_first
     assert pre_add_load.assignments.count() == n_first
@@ -580,7 +582,7 @@ def test_ivf_add_snapshot_isolation(spark, tmp_path):
     again = grown.add(
         second.select((F.col("vec_id") + 10_000).alias("vec_id"), "embedding")
     )
-    assert again.data_dirs == ["data", "data-add1", "data-add2"]
+    assert len(again.data_dirs) == 3 and again.data_dirs[:2] == grown.data_dirs
     assert again.assignments.count() == emb.count() + second.count()
     assert grown.assignments.count() == emb.count()
 
@@ -604,10 +606,12 @@ def test_ivf_compact_folds_add_dirs(spark, tmp_path):
         (r.qid, r.rank, r.vec_id)
         for r in grown.search(q, k=5, nprobe=8).select("qid", "rank", "vec_id").collect()
     )
+    grown_dirs = list(grown.data_dirs)
     compacted = grown.compact()
-    assert compacted.data_dirs == ["data-compact2"]
+    assert len(compacted.data_dirs) == 1
+    assert compacted.data_dirs[0] not in grown_dirs
     assert compacted.assignments.count() == emb.count()
-    assert grown.data_dirs == ["data", "data-add1"]  # snapshot untouched
+    assert grown.data_dirs == grown_dirs  # snapshot untouched
     after = sorted(
         (r.qid, r.rank, r.vec_id)
         for r in compacted.search(q, k=5, nprobe=8)
@@ -617,7 +621,7 @@ def test_ivf_compact_folds_add_dirs(spark, tmp_path):
     assert after == before
     # a fresh load sees exactly the compacted dir, and pruning still fires
     reopened = IvfIndex.load(spark, p)
-    assert reopened.data_dirs == ["data-compact2"]
+    assert reopened.data_dirs == compacted.data_dirs
     assert reopened.assignments.count() == emb.count()
     import re as _re
 
@@ -628,13 +632,14 @@ def test_ivf_compact_folds_add_dirs(spark, tmp_path):
     assert m and "cluster_id" in m.group(1), plan
     # compacting a single-dir index is a no-op
     assert compacted.compact() is compacted
-    # vacuum deletes the dirs the current metadata no longer references;
-    # the compacted index is untouched and still searchable
-    deleted = compacted.vacuum()
-    assert deleted == ["data", "data-add1"]
+    # expire + vacuum delete the dirs the head manifest no longer
+    # references; the compacted index is untouched and still searchable
+    wh = Warehouse(spark, p)
+    wh.expire(keep_last=1)
+    assert sorted(wh.vacuum()) == sorted(grown_dirs)
     still = IvfIndex.load(spark, p)
     assert still.assignments.count() == emb.count()
-    assert compacted.vacuum() == []  # idempotent
+    assert wh.vacuum() == []  # idempotent
 
 
 def test_lsh_save_load_roundtrip(spark, tmp_path, emb, queries10):
@@ -682,42 +687,48 @@ def test_lsh_incremental_add_equals_full_build(spark):
 
 def test_ivf_add_after_compact_never_reuses_dirs(spark, tmp_path):
     """ADVICE r4 #1 regression: build -> add -> compact -> add must NOT
-    regenerate 'data-add1' (pre-compact handles still read it) — dir
-    suffixes are monotonic across the whole index history, and a further
-    compact must not overwrite the live compacted dir."""
+    reuse the first add's dir (pre-compact handles still read it) — every
+    write lands in a dir no earlier write used, and a further compact
+    must not overwrite the live compacted dir."""
     emb = read_table(spark, "/root/testdata/sf0.001", "embeddings")
     first = emb.filter(F.col("vec_id") % 2 == 0)
     second = emb.filter(F.col("vec_id") % 2 == 1)
     third = second.select((F.col("vec_id") + 10_000).alias("vec_id"), "embedding")
     p = str(tmp_path / "ivf")
     idx = IvfIndex.build(first, n_clusters=8, path=p, seed=42)
-    grown = idx.add(second)                      # data, data-add1
-    compacted = grown.compact()                  # data-compact2
+    grown = idx.add(second)                      # build, add 1
+    grown_dirs = list(grown.data_dirs)
+    compacted = grown.compact()                  # compact 1
     n_compacted = compacted.assignments.count()
-    again = compacted.add(third)                 # must be data-add3, NOT data-add1
-    assert again.data_dirs == ["data-compact2", "data-add3"]
-    # the pre-compact handle still reads its snapshot — its data-add1 rows
+    again = compacted.add(third)                 # add 2: a fresh dir
+    assert again.data_dirs[0] == compacted.data_dirs[0]
+    assert again.data_dirs[1] not in grown_dirs + compacted.data_dirs
+    # the pre-compact handle still reads its snapshot — its first-add rows
     # were not clobbered by the second add
     assert grown.assignments.count() == emb.count()
-    assert grown.data_dirs == ["data", "data-add1"]
+    assert grown.data_dirs == grown_dirs
     # a second compact lands in a fresh dir, not over the live one
     recompacted = again.compact()
-    assert recompacted.data_dirs == ["data-compact4"]
+    assert len(recompacted.data_dirs) == 1
+    assert recompacted.data_dirs[0] not in grown_dirs + again.data_dirs
     assert recompacted.assignments.count() == n_compacted + third.count()
-    # the handle that was reading data-compact2 during the compact is intact
+    # the handle that was reading the first compact's dir is intact
     assert compacted.assignments.count() == n_compacted
 
 
 def test_ivf_load_corrupt_meta_raises(spark, tmp_path):
-    """ADVICE r4 #2 regression: a PRESENT-but-corrupt metadata file must
-    surface the real error, not silently fall back to the pre-v1 layout
+    """ADVICE r4 #2 regression: a PRESENT-but-corrupt head manifest must
+    surface the real error, not silently fall back to an older snapshot
     (which after a compact points at a stale or vacuumed dir)."""
     emb = read_table(spark, "/root/testdata/sf0.001", "embeddings")
     p = str(tmp_path / "ivf")
     idx = IvfIndex.build(emb, n_clusters=8, path=p, seed=42)
-    (tmp_path / "ivf" / "centroids.json").write_text("{not json")
-    with pytest.raises(Exception):
-        IvfIndex.load(spark, p, centroids=idx.centroids, id_col="vec_id", vec_col="embedding")
+    idx.add(emb.select((F.col("vec_id") + 10_000).alias("vec_id"), "embedding"))
+    head = tmp_path / "ivf" / "_log" / f"{2:020d}.json"
+    head.write_text(head.read_text()[:40])  # truncated head manifest
+    (tmp_path / "ivf" / "_log" / f".{2:020d}.json.crc").unlink()
+    with pytest.raises(ValueError):
+        IvfIndex.load(spark, p)
 
 
 def test_external_embed_df_validates_per_chunk(spark):
@@ -904,28 +915,30 @@ def test_lsh_search_predicate_parity(emb, queries10):
 
 def test_tagged_add_idempotent_and_vacuum_safe(emb, queries10, tmp_path):
     """Replaying a tagged add is a no-op; vacuum never deletes a tagged
-    dir that the current metadata references."""
+    dir that the head manifest references."""
     half_a = emb.filter(F.col("vec_id") % 2 == 0)
     half_b = emb.filter(F.col("vec_id") % 2 == 1)
     path = str(tmp_path / "ivf")
+    wh = Warehouse(emb.sparkSession, path)
     idx = IvfIndex.build(half_a, n_clusters=8, seed=42, path=path)
     n0 = idx.assignments.count()
     grown = idx.add(half_b, tag="batch7")
-    assert "data-add-batch7" in grown.data_dirs
+    assert wh.meta()["tags"] == ["batch7"] and len(grown.data_dirs) == 2
     n1 = grown.assignments.count()
     assert n1 > n0
     # replay from a stale handle: published tag -> no-op, fresh snapshot
     replay = idx.add(half_b, tag="batch7")
     assert replay.assignments.count() == n1
     assert replay.data_dirs == grown.data_dirs
-    # vacuum: both live dirs survive
-    assert grown.vacuum() == []
+    # expire + vacuum: both live dirs survive
+    wh.expire(keep_last=1)
+    assert wh.vacuum() == []
     loaded = IvfIndex.load(emb.sparkSession, path)
     assert loaded.assignments.count() == n1
-    # compact folds the tagged dir; vacuum then removes it
-    compacted = loaded.compact()
-    deleted = compacted.vacuum()
-    assert "data-add-batch7" in deleted and "data" in deleted
+    # compact folds the tagged dir; expire + vacuum then remove it
+    loaded.compact()
+    wh.expire(keep_last=1)
+    assert sorted(wh.vacuum()) == sorted(grown.data_dirs)
     assert IvfIndex.load(emb.sparkSession, path).assignments.count() == n1
 
 
@@ -1048,12 +1061,13 @@ def test_ivf_rebalance_after_drifted_adds(spark, tmp_path, emb, queries10):
         (r.qid, r.rank, r.vec_id) for r in exact_all.collect()
     )
     # snapshot semantics: old handle unchanged; fresh load sees new dirs
-    assert grown.data_dirs != reb.data_dirs
+    assert not set(grown.data_dirs) & set(reb.data_dirs)
     fresh = IvfIndex.load(spark, path)
     assert fresh.data_dirs == reb.data_dirs
     assert [c[1] for c in fresh.centroids] == [c[1] for c in reb.centroids]
-    removed = reb.vacuum()
-    assert "data" in removed and any(d.startswith("data-add") for d in removed)
+    wh = Warehouse(spark, path)
+    wh.expire(keep_last=1)
+    assert sorted(wh.vacuum()) == sorted(grown.data_dirs)
 
 
 def test_ivf_rebalance_in_memory(emb, queries10):

@@ -355,7 +355,9 @@ def test_index_documents_stream_maintains_materialized_index(spark, tmp_path):
     # replayed tagged add: no-op, no duplicate rows
     some = all_chunks.limit(7)
     before = idx.assignments.count()
-    tag_dirs = [d for d in idx.data_dirs if d.startswith("data-add-b")]
-    assert tag_dirs, idx.data_dirs  # the streamed batch landed tagged
-    replay = IvfIndex.load(spark, idx_path).add(some, tag=tag_dirs[0].removeprefix("data-add-"))
+    from oracle_vectorsearch_example_spark.sources.txn import Warehouse
+
+    tags = [t for t in Warehouse(spark, idx_path).meta()["tags"] if t.startswith("b")]
+    assert tags, idx.data_dirs  # the streamed batch landed tagged
+    replay = IvfIndex.load(spark, idx_path).add(some, tag=tags[0])
     assert replay.assignments.count() == before

@@ -86,6 +86,25 @@ def test_commit_conflict_after_retries(spark, wh):
         wh.commit({"a": _df(spark, [(1, "x")])}, max_retries=2)
 
 
+def test_meta_carries_forward_and_conflicts_on_rebase(spark, wh):
+    """Manifest ``meta`` carries forward like ``tables`` (a manifest from
+    before it existed reads as ``{}``); a commit that lost the race to a
+    meta change raises instead of rebasing."""
+    assert wh._publish(1, {"version": 1, "parent": None, "tables": {}})
+    assert wh.meta() == {}
+    wh.commit({"a": _df(spark, [(1, "x")])}, meta={"k": 1, "j": 0})
+    wh.commit({"b": _df(spark, [(2, "y")])}, meta={"k": 2})
+    wh.commit({"a": _df(spark, [(3, "z")])})
+    assert wh.meta() == {"k": 2, "j": 0} and wh.meta(version=2) == {"k": 1, "j": 0}
+    stale = wh.current_version()
+    Warehouse(spark, wh.root).commit({"c": _df(spark, [(4, "w")])}, meta={"k": 3})
+    written = wh.stage(["d"], stale)
+    _df(spark, [(5, "v")]).write.parquet(f"{wh.root}/{written['d']}")
+    with pytest.raises(CommitConflict):
+        wh.commit_staged(stale, written)
+    assert wh.tables() == ["a", "b", "c"]
+
+
 def test_empty_commit_rejected(wh):
     with pytest.raises(ValueError):
         wh.commit({})
