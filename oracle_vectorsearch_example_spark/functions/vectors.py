@@ -8,8 +8,10 @@
 - the shared vector top-k plumbing (``WHERE ... ORDER BY VECTOR_DISTANCE
   ... FETCH FIRST k``, 01_pdf_to_vector.sql:84-97): ``arrow_topk`` (the
   per-partition ``mapInArrow`` top-k over a search path's own scorer),
-  ``rank_topk`` (the one global merge), the Arrow → numpy matrix readers
-  and the driver-side query / centroid helpers every search path uses.
+  its two merges — ``collect_topk`` on the driver for every path that
+  holds its queries there, ``rank_topk`` as a distributed window for the
+  ones that do not — the Arrow → numpy matrix readers and the
+  driver-side query / centroid helpers every search path uses.
 """
 
 from __future__ import annotations
@@ -117,10 +119,16 @@ def arrow_topk_per_group(qids, bids, dists, k):
         qids, bids, dists = qids[keep], bids[keep], dists[keep]
     order = np.lexsort((bids, dists, qids))
     q, b, d = qids[order], bids[order], dists[order]
-    starts = np.flatnonzero(np.r_[True, q[1:] != q[:-1]])
-    group_start = np.repeat(starts, np.diff(np.r_[starts, len(q)]))
-    keep = (np.arange(len(q)) - group_start) < k
+    keep = _run_positions(q) < k
     return q[keep], b[keep], d[keep]
+
+
+def _run_positions(q):
+    """0-based position of every element within its run of equal values."""
+    import numpy as np
+
+    starts = np.flatnonzero(np.r_[True, q[1:] != q[:-1]])
+    return np.arange(len(q)) - np.repeat(starts, np.diff(np.r_[starts, len(q)]))
 
 
 def pairs(qids, bids, dist):
@@ -168,21 +176,49 @@ def arrow_topk(frame, score, k, exclude_self=False, dist_type="double"):
     where ``score(rb)`` yields one or more parallel ``(qid, bid, dist)``
     numpy arrays per Arrow batch (:func:`pairs` flattens a dense block).
     Each partition leaves ≤ k rows per query (:func:`topk_partition`),
-    so the shuffle into :func:`rank_topk` is ≤ P·Q·k rows, never N·Q — a
-    local top-k per partition, then one merge. ``dist_type`` is the
-    Spark type of the scorer's distances (``long`` keeps integer
-    Hamming distances exact)."""
+    so the merge (:func:`collect_topk` or :func:`rank_topk`) sees ≤ P·Q·k
+    rows, never N·Q — a local top-k per partition, then one merge.
+    ``dist_type`` is the Spark type of the scorer's distances (``long``
+    keeps integer Hamming distances exact)."""
     def topk(batches):  # named: the plan shows ``MapInArrow topk(...)``
         return topk_partition(batches, score, k, exclude_self)
 
     return frame.mapInArrow(topk, schema=f"__qid long, __bid long, __dist {dist_type}")
 
 
+def collect_topk(scored, k, query_id, id_col, dist_name="distance"):
+    """The driver-side merge of :func:`arrow_topk` candidates, for every
+    search whose queries are already on the driver: runs the top-k job
+    once, pulls its ≤ P·Q·k candidates with ``toArrow()`` and merges them
+    with the same :func:`arrow_topk_per_group` the partitions use (ties
+    break by id). Returns the ranked ``(query_id, rank, id_col,
+    dist_name)`` rows as a local relation, so collecting it runs no
+    Spark job; rows equal :func:`rank_topk`'s."""
+    import numpy as np
+    import pyarrow as pa
+
+    t = scored.toArrow()
+    q, b, d = arrow_topk_per_group(
+        *(t.column(c).to_numpy() for c in ("__qid", "__bid", "__dist")), k
+    )
+    ranked = pa.table(
+        [
+            pa.array(q, pa.int64()),
+            pa.array(_run_positions(q) + 1, pa.int64()),
+            pa.array(b, pa.int64()),
+            pa.array(d, t.schema.field("__dist").type),
+        ],
+        names=[query_id, "rank", id_col, dist_name],
+    )
+    return scored.sparkSession.createDataFrame(ranked)
+
+
 def rank_topk(scored, k, query_id, id_col, dist_name="distance"):
-    """The one global merge of :func:`arrow_topk` candidates: rank per
-    query by (distance, id) — ties break by id, so results are
-    deterministic — keep k, and name the columns
-    ``(query_id, rank, id_col, dist_name)``."""
+    """The distributed merge of :func:`arrow_topk` candidates, for query
+    frames that stay distributed (``IvfIndex.search_df``, the ``expr``
+    reference path): rank per query by (distance, id) — ties break by id,
+    so results are deterministic — keep k, and name the columns
+    ``(query_id, rank, id_col, dist_name)``. Lazy, one shuffle."""
     w = Window.partitionBy("__qid").orderBy(F.col("__dist").asc(), F.col("__bid").asc())
     return (
         scored.withColumn("rank", F.row_number().over(w))
@@ -199,7 +235,8 @@ def rank_topk(scored, k, query_id, id_col, dist_name="distance"):
 def collect_queries(queries, query_id, query_vec):
     """A bounded query frame on the driver, in one collect: ``(qids,
     qmat)`` as an int64 vector and a (Q, d) float64 matrix ((0, 0) when
-    the frame is empty)."""
+    the frame is empty). On a :func:`query_frame` the collect runs no
+    Spark job."""
     import numpy as np
 
     rows = queries.select(query_id, query_vec).collect()
@@ -207,6 +244,26 @@ def collect_queries(queries, query_id, query_vec):
     if not rows:
         return qids, np.zeros((0, 0))
     return qids, np.array([list(r[1]) for r in rows], dtype=np.float64)
+
+
+def query_frame(spark, qids, qmat, query_id="qid", query_vec="qvec"):
+    """``(query_id long, query_vec array<…>)`` from driver-side query ids
+    and a (Q, d) matrix, as a local relation (built from one Arrow table,
+    not a parallelized Python list): collecting it — as every search's
+    :func:`collect_queries` does — runs no Spark job. The array's element
+    type follows ``qmat``'s dtype (float32 → ``array<float>``)."""
+    import numpy as np
+    import pyarrow as pa
+
+    qmat = np.asarray(qmat)
+    if qmat.ndim != 2:  # no queries at all
+        qmat = qmat.reshape(0, 0)
+    n, d = qmat.shape
+    vecs = pa.ListArray.from_arrays(
+        pa.array(np.arange(n + 1, dtype=np.int32) * d), pa.array(qmat.ravel())
+    )
+    ids = pa.array(np.asarray(qids, dtype=np.int64))
+    return spark.createDataFrame(pa.table([ids, vecs], names=[query_id, query_vec]))
 
 
 def probe_map(probe_lists):

@@ -33,8 +33,8 @@ from oracle_vectorsearch_example_spark.functions.vectors import (
     arrow_list_matrix,
     arrow_topk,
     collect_queries,
+    collect_topk,
     pairs,
-    rank_topk,
 )
 
 
@@ -100,7 +100,8 @@ def bq_topk_search(
     (ties by id), so the golden needs no rounding discipline. Runs on
     the shared ``arrow_topk`` kernel (``mapInArrow``): the packed words
     enter numpy as one reshaped Arrow values buffer per batch, and the
-    distances stay int64 through the merge."""
+    distances stay int64 through the driver-side merge. Evaluates at call
+    time and returns a local relation, like ``topk_search``."""
     import numpy as np
 
     qids, qv = collect_queries(queries, query_id, query_vec)
@@ -122,4 +123,4 @@ def bq_topk_search(
 
     frame = codes.select(F.col(id_col).cast("long").alias(id_col), "words")
     scored = arrow_topk(frame, score, k, exclude_self, dist_type="long")
-    return rank_topk(scored, k, query_id, id_col, dist_name="hamming")
+    return collect_topk(scored, k, query_id, id_col, dist_name="hamming")

@@ -13,7 +13,8 @@ queries probe only the ``nprobe`` nearest clusters. Spark-native build:
   filter becomes **partition pruning** at the parquet scan: a 1000-executor
   job reads nprobe/k of the data, no custom index structure needed.
 - search: centroid distances are computed driver-side (centroids are tiny),
-  pruned scan + exact re-rank within the probed clusters via topk_search.
+  pruned scan + exact re-rank within the probed clusters on the shared
+  ``arrow_topk`` kernel, merged on the driver — one Spark job per batch.
 
 Recall is tuned with nprobe; the recall@k ≥ 0.95 harness (DQ-37*) mirrors
 TARGET ACCURACY 95.
@@ -31,10 +32,12 @@ from oracle_vectorsearch_example_spark.functions.vectors import (
     arrow_list_matrix,
     arrow_topk,
     collect_queries,
+    collect_topk,
     nearest_centroids,
     normalize_l2,
     pairs,
     probe_map,
+    query_frame,
     rank_topk,
 )
 from oracle_vectorsearch_example_spark.operators.search import topk_search
@@ -513,7 +516,7 @@ class IvfIndex:
         qids, qmat = collect_queries(queries, query_id, query_vec)
         exact = topk_search(
             self.assignments,
-            queries,
+            query_frame(queries.sparkSession, qids, qmat, query_id, query_vec),
             k=k,
             metric="cosine",
             base_id=self.id_col,
@@ -591,6 +594,11 @@ class IvfIndex:
     ) -> DataFrame:
         """ANN top-k: per-query centroid prune (driver-side, centroids are
         tiny) → pruned scan of the probed clusters → exact re-rank.
+        Evaluates at call time — one Spark job, plus one to collect
+        ``queries`` unless it is a local relation (``query_frame``) — and
+        returns the ranked ``(query_id, rank, id, distance)`` rows as a
+        local relation: the candidates are merged on the driver
+        (``collect_topk``).
 
         ``predicate`` (Column or SQL string over the id/payload columns)
         implements the reference's filtered search — ``WHERE ... ORDER BY
@@ -642,7 +650,7 @@ class IvfIndex:
                 yield pairs(qids[pos], bids[rows], (1.0 - sim).T)
 
         scored = arrow_topk(pruned, score, k, exclude_self)
-        return rank_topk(scored, k, query_id, self.id_col)
+        return collect_topk(scored, k, query_id, self.id_col)
 
     def search_df(
         self,
@@ -670,7 +678,11 @@ class IvfIndex:
            (shuffle hash/sort-merge join — a BLOCKED join, work ∝
            Σ_c |Q_c|·|B_c|, never all-pairs);
         3. per-partition BLAS re-rank keeps k candidates per query before
-           the final window, so the last shuffle is P·Q·k rows.
+           the final window (``rank_topk``), so the last shuffle is P·Q·k
+           rows.
+
+        Unlike ``search``, the result is a lazy, distributed plan: nothing
+        runs until the caller acts on it.
 
         With nprobe = n_clusters the result is exact (hash-checked in the
         ``ivf_search_df`` golden); at nprobe < n_clusters recall is gated

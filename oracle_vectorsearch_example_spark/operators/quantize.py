@@ -60,10 +60,11 @@ from oracle_vectorsearch_example_spark.functions.vectors import (
     arrow_binary_matrix,
     arrow_topk,
     collect_queries,
+    collect_topk,
     nearest_centroids,
     pairs,
     probe_map,
-    rank_topk,
+    query_frame,
 )
 
 
@@ -124,8 +125,9 @@ def sq8_topk_search(
     """Asymmetric cosine top-k over SQ8 codes: float queries broadcast,
     each Arrow batch (``arrow_topk``, ``mapInArrow``) decodes int8 →
     float with ONE multiply and scores with one BLAS matmul — the same
-    P·Q·k candidate shuffle as ``topk_search``, reading a quarter of the
-    bytes. Returns (query_id, rank, id, distance); ties break by id."""
+    P·Q·k candidates, merged on the driver, as ``topk_search``, reading a
+    quarter of the bytes. Evaluates at call time and returns (query_id,
+    rank, id, distance) as a local relation; ties break by id."""
     import numpy as np
 
     qids, qmat = collect_queries(queries, query_id, query_vec)
@@ -148,7 +150,7 @@ def sq8_topk_search(
         yield pairs(qids, bids, dist)
 
     frame = codes.select(F.col(id_col).cast("long").alias(id_col), "code", "scale")
-    return rank_topk(arrow_topk(frame, score, k, exclude_self), k, query_id, id_col)
+    return collect_topk(arrow_topk(frame, score, k, exclude_self), k, query_id, id_col)
 
 
 def sq8_encode_index(index, path: str | None = None) -> DataFrame:
@@ -183,9 +185,9 @@ def sq8_ivf_search(
 ) -> DataFrame:
     """IVF-pruned SQ8 search: the float index's driver-side centroid
     probe + the quantized code scan — partition pruning AND the 4× byte
-    reduction compose. Same candidate-shuffle bound and tie rules as
-    ``IvfIndex.search``; cosine on codes (scale cancels), so the float
-    vectors are never read."""
+    reduction compose. Same driver-side candidate merge, tie rules and
+    call-time evaluation as ``IvfIndex.search``; cosine on codes (scale
+    cancels), so the float vectors are never read."""
     import numpy as np
 
     qids, qmat = collect_queries(queries, query_id, query_vec)
@@ -212,7 +214,7 @@ def sq8_ivf_search(
     pruned = codes.filter(F.col("cluster_id").isin(sorted(probers))).select(
         "cluster_id", id_col, "code"
     )
-    return rank_topk(arrow_topk(pruned, score, k, exclude_self), k, query_id, id_col)
+    return collect_topk(arrow_topk(pruned, score, k, exclude_self), k, query_id, id_col)
 
 
 # ------------------------------------------------------- product quantization
@@ -319,8 +321,8 @@ def pq_topk_search(
     sub-space dot products ships in the task closure; each row's score
     is m TABLE LOOKUPS + a precomputed norm division — no decode, no
     per-row matmul (the PQ paper's asymmetric distance computation).
-    Same ``arrow_topk`` candidate-shuffle bound and tie rules as
-    ``topk_search``."""
+    Same ``arrow_topk`` kernel, driver-side merge, tie rules and
+    call-time evaluation (a local relation back) as ``topk_search``."""
     import numpy as np
 
     books = np.asarray(codebooks, dtype=np.float64)
@@ -336,7 +338,7 @@ def pq_topk_search(
         yield pairs(qids, bids, _adc_dist(lut, qnorm, range(len(qids)), code, vn))
 
     frame = codes.select(F.col(id_col).cast("long").alias(id_col), "code", "vnorm")
-    return rank_topk(arrow_topk(frame, score, k, exclude_self), k, query_id, id_col)
+    return collect_topk(arrow_topk(frame, score, k, exclude_self), k, query_id, id_col)
 
 
 def _adc_tables(books, qmat):
@@ -387,7 +389,7 @@ def pq_refine_topk(
     is one 64-B/vec pass. Measured on the 4M fixture: PQ(m=16)
     candidates@100 cover 0.994 of the true top-10, so the refined recall
     matches plain SQ8 at a quarter of its scan bytes in the ranking
-    stage."""
+    stage. Evaluates at call time and returns a local relation."""
     import numpy as np
 
     qids, qmat = collect_queries(queries, query_id, query_vec)
@@ -415,7 +417,7 @@ def pq_refine_topk(
         sims = (v * qmat[qp]).sum(axis=1) / vn  # row-wise dot, q pre-normed
         yield qids_, bids, 1.0 - sims
 
-    return rank_topk(arrow_topk(joined, score, k), k, query_id, id_col)
+    return collect_topk(arrow_topk(joined, score, k), k, query_id, id_col)
 
 
 def pq_encode_index(index, codebooks, path: str | None = None) -> DataFrame:
@@ -460,7 +462,8 @@ def pq_ivf_search(
     :func:`pq_refine_topk` re-ranks them against the SQ8 table. No
     stage reads a float corpus vector; at 100 TB the PQ scan is the
     only per-probe full pass and it reads 16 bytes/row. Same tie rules
-    as ``IvfIndex.search``."""
+    and call-time evaluation as ``IvfIndex.search``: the query frame is
+    collected once, and both stages merge on the driver."""
     import numpy as np
 
     books = np.asarray(codebooks, dtype=np.float64)
@@ -488,10 +491,11 @@ def pq_ivf_search(
     pruned = pq_codes.filter(F.col("cluster_id").isin(sorted(probers))).select(
         "cluster_id", id_col, "code", "vnorm"
     )
-    candidates = rank_topk(
+    candidates = collect_topk(
         arrow_topk(pruned, score, kc, exclude_self), kc, query_id, id_col
     ).select(query_id, id_col)
+    local_queries = query_frame(queries.sparkSession, qids, qmat, query_id, query_vec)
     return pq_refine_topk(
-        candidates, sq8_codes, queries, k=k,
+        candidates, sq8_codes, local_queries, k=k,
         id_col=id_col, query_id=query_id, query_vec=query_vec,
     )

@@ -7,18 +7,19 @@ once, partition-local. Two implementations:
 
 - ``impl="numpy"`` (default): the shared ``arrow_topk`` kernel
   (``mapInArrow``) scores each Arrow batch against the broadcast query
-  matrix with one BLAS matmul and keeps a per-partition top-k, so the
-  shuffle is P·Q·k candidate rows — never N·Q. Spark's column
+  matrix with one BLAS matmul and keeps a per-partition top-k, and the
+  driver merges the P·Q·k candidate rows (``collect_topk``) — never
+  N·Q, one Spark job per search. Spark's column
   higher-order functions (``zip_with``/``aggregate``) run interpreted (no
   codegen), which makes per-pair expression math the bottleneck at scale;
   Arrow + BLAS is 10-100× faster per row.
 - ``impl="expr"``: pure column expressions (distances.vector_distance) +
-  a per-partition window top-k. JVM-only, no Python workers — the
-  cross-check path and the right choice when Python workers are
-  unavailable.
+  a per-partition window top-k, merged by the distributed ``rank_topk``
+  window. JVM-only, no Python workers — the cross-check path and the
+  right choice when Python workers are unavailable.
 
-Both break distance ties by base id and end in the same ``rank_topk``
-merge, so results are identical and deterministic.
+Both rank by (distance, base id), so results are identical and
+deterministic.
 """
 
 from __future__ import annotations
@@ -34,6 +35,7 @@ from oracle_vectorsearch_example_spark.functions.vectors import (
     arrow_list_matrix,
     arrow_topk,
     collect_queries,
+    collect_topk,
     pairs,
     rank_topk,
 )
@@ -97,7 +99,10 @@ def topk_search(
     Returns (query_id, rank, base_id, distance); rank is 1-based, ties
     broken by base id so results are deterministic. Queries are collected
     to the driver (small by contract — the reference's search is likewise
-    one query vector at a time, models/README.md:40).
+    one query vector at a time, models/README.md:40). The numpy path
+    evaluates at call time in one Spark job (none more when ``queries``
+    is a local relation) and returns a local relation; ``impl="expr"``
+    returns a lazy, distributed plan.
 
     ``predicate`` (Column or SQL string over base columns) is the
     reference's filtered-search idiom — ``WHERE ... ORDER BY
@@ -119,6 +124,7 @@ def topk_search(
             .filter(F.col(base_vec).isNotNull())
         )
         scored = arrow_topk(frame, _numpy_scorer(qids, qmat, metric), k, exclude_self)
+        return collect_topk(scored, k, query_id, base_id)
     elif impl in ("numpy", "expr"):
         q = queries.select(
             F.col(query_id).alias("__qid"), F.col(query_vec).alias("__qvec")

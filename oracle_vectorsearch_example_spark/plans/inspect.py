@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import io
 import re
+import uuid
 from contextlib import redirect_stdout
 
 from pyspark.sql import DataFrame
@@ -19,6 +20,51 @@ def explain_str(df: DataFrame, mode: str = "formatted") -> str:
     with redirect_stdout(buf):
         df.explain(mode=mode)
     return buf.getvalue()
+
+
+def spark_jobs(spark, fn) -> int:
+    """Spark jobs ``fn()`` runs, counted by the status tracker on a job
+    group of its own."""
+    sc = spark.sparkContext
+    group = f"count-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def executed_plans(spark, fn) -> list[str]:
+    """Run ``fn()`` and return the physical plan of every SQL execution it
+    ran, oldest first, in ``explain(mode="simple")`` form (an adaptive
+    plan's final plan only). For operators that evaluate at call time and
+    return a local relation (the vector searches), the returned frame's own
+    plan is a ``LocalTableScan``; the plan that read the data is the one
+    they executed. Plans come from the session's SQL status store once the
+    listener bus has drained."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+
+    def last_id() -> int:
+        bus.waitUntilEmpty()
+        n = store.executionsCount()
+        return store.executionsList(n - 1, 1).apply(0).executionId() if n else -1
+
+    prev = spark.conf.get("spark.sql.ui.explainMode")
+    start = last_id()
+    spark.conf.set("spark.sql.ui.explainMode", "extended")
+    try:
+        fn()
+    finally:
+        spark.conf.set("spark.sql.ui.explainMode", prev)
+    plans = []
+    for i in range(start + 1, last_id() + 1):
+        ex = store.execution(i)
+        if ex.isDefined():
+            desc = ex.get().physicalPlanDescription()
+            plans.append(desc.split("== Physical Plan ==")[-1].split("== Initial Plan ==")[0])
+    return plans
 
 
 def pushed_filters(df: DataFrame) -> list[str]:

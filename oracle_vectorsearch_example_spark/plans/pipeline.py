@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 from oracle_vectorsearch_example_spark.functions.chunker import chunk_by_words
 from oracle_vectorsearch_example_spark.functions.embedding import HashingEmbedder
 from oracle_vectorsearch_example_spark.functions.extract import with_extracted_text
+from oracle_vectorsearch_example_spark.functions.vectors import query_frame
 from oracle_vectorsearch_example_spark.operators.search import topk_search
 
 # chunk-key packing limits (doc_id · 2^20 + chunk_id below); rows beyond
@@ -93,19 +94,24 @@ def search_text(
     qualifying chunks return.
     """
     embedder = embedder or HashingEmbedder(dim=64)
-    spark = doc_chunks.sparkSession
-    # queries are small by contract: embed driver-side (identical function
-    # to the distributed UDF) — no Spark job / Python worker for 3 strings
-    qvecs = embedder.embed_texts(query_texts)
-    q = spark.createDataFrame(
-        [(i, v) for i, v in enumerate(qvecs)], "qid long, qvec array<double>"
-    )
+    q = _query_frame(doc_chunks.sparkSession, embedder, query_texts)
     base = _with_chunk_key(doc_chunks)
     hits = topk_search(
         base, q, k=k, metric=metric, base_id="__chunk_key", base_vec="embedding",
         query_id="qid", query_vec="qvec", predicate=predicate,
     )
     return _unpack_chunk_key(hits)
+
+
+def _query_frame(spark, embedder, query_texts: list[str]) -> DataFrame:
+    """``(qid long, qvec array<double>)`` for the query strings, as a local
+    relation. Queries are small by contract: they embed driver-side (the
+    same function as the distributed UDF), and the search's query collect
+    then runs no Spark job either."""
+    import numpy as np
+
+    qvecs = np.asarray(embedder.embed_texts(query_texts), dtype=np.float64)
+    return query_frame(spark, np.arange(len(query_texts)), qvecs)
 
 
 def _with_chunk_key(doc_chunks: DataFrame) -> DataFrame:
@@ -189,11 +195,7 @@ def search_text_ivf(
     exactly (tested). Cosine metric — the index's distance
     (01_pdf_to_vector.sql:96)."""
     embedder = embedder or HashingEmbedder(dim=64)
-    spark = index.assignments.sparkSession
-    qvecs = embedder.embed_texts(query_texts)
-    q = spark.createDataFrame(
-        [(i, v) for i, v in enumerate(qvecs)], "qid long, qvec array<double>"
-    )
+    q = _query_frame(index.assignments.sparkSession, embedder, query_texts)
     hits = index.search(q, k=k, nprobe=nprobe, predicate=predicate)
     if index.id_col != "__chunk_key":
         hits = hits.withColumnRenamed(index.id_col, "__chunk_key")

@@ -25,6 +25,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from oracle_vectorsearch_example_spark.functions.vectors import query_frame
 from oracle_vectorsearch_example_spark.sources.txn import Warehouse
 
 DEFAULT_N = 4_000_000
@@ -127,11 +128,12 @@ def ann_query_frame(
     noise: float = DEFAULT_NOISE,
     seed: int = DEFAULT_SEED,
 ) -> DataFrame:
-    """Tiny query frame ``(qid, qvec)`` holding the EXACT fixture vectors
-    for the given ids, computed driver-side from the same deterministic
-    formula — a local relation, no scan. Benching an ANN search must not
-    pay a full-table scan just to fetch 16 query vectors (that scan would
-    be charged to the INDEXED path and erase its win)."""
+    """Tiny query frame ``(qid long, qvec array<float>)`` holding the
+    EXACT fixture vectors for the given ids, computed driver-side from the
+    same deterministic formula — a local relation (``query_frame``), so
+    neither a scan nor a collect of it runs a Spark job. Benching an ANN
+    search must not pay a full-table scan just to fetch 16 query vectors
+    (that scan would be charged to the INDEXED path and erase its win)."""
     import numpy as np
 
     rng = np.random.default_rng(seed)
@@ -141,8 +143,7 @@ def ann_query_frame(
     g = _hash_gaussians(arr, dim, seed)
     v = centers[arr % n_centers] + (noise / np.sqrt(dim)) * g
     v /= np.linalg.norm(v, axis=1, keepdims=True)
-    rows = [(int(i), [float(x) for x in np.float32(row)]) for i, row in zip(ids, v)]
-    return spark.createDataFrame(rows, "qid long, qvec array<float>")
+    return query_frame(spark, arr, v.astype(np.float32))
 
 
 def ensure_ann_fixture(

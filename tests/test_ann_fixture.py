@@ -142,8 +142,13 @@ def test_recall_monotone_in_nprobe_and_exact_at_full_probe(midsize):
 
 def test_search_prunes_partitions(midsize):
     """The probed-cluster isin() must reach the materialized index scan as
-    a PartitionFilter — at 100 TB this pruning is the entire point."""
+    a PartitionFilter — at 100 TB this pruning is the entire point. The
+    plan checked is the top-k plan ``search`` runs at call time."""
+    from oracle_vectorsearch_example_spark.plans.inspect import executed_plans
+
     _, idx, q = midsize
-    plan = idx.search(q, k=10, nprobe=4)._jdf.queryExecution().executedPlan().toString()
+    spark = idx.assignments.sparkSession
+    plans = executed_plans(spark, lambda: idx.search(q, k=10, nprobe=4))
+    (plan,) = [pl for pl in plans if "MapInArrow topk" in pl]
     assert "PartitionFilters" in plan
     assert "cluster_id" in plan.split("PartitionFilters", 1)[1][:400]

@@ -7,12 +7,12 @@ from __future__ import annotations
 
 import json
 import os
-import uuid
 
 import pytest
 from pyspark.sql import functions as F
 
 from oracle_vectorsearch_example_spark.operators.ivf import IvfIndex
+from oracle_vectorsearch_example_spark.plans.inspect import spark_jobs as _jobs
 from oracle_vectorsearch_example_spark.sources.io import read_table
 from oracle_vectorsearch_example_spark.sources.txn import CommitConflict, Warehouse
 
@@ -31,18 +31,6 @@ def _shifted(emb, offset: int, parity: int | None = None):
     """``emb`` under fresh ids (``vec_id + offset``), optionally one parity."""
     df = emb if parity is None else emb.filter(F.col("vec_id") % 2 == parity)
     return df.select((F.col("vec_id") + offset).alias("vec_id"), "embedding")
-
-
-def _jobs(spark, fn) -> int:
-    """Spark jobs ``fn`` runs, counted by the status tracker on a job group."""
-    sc = spark.sparkContext
-    group = f"count-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def _metadata_files(root: str) -> dict[str, bytes]:

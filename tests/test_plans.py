@@ -13,6 +13,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from oracle_vectorsearch_example_spark.plans.inspect import (
+    executed_plans,
     explain_str,
     has_broadcast_join,
     has_wholestage_codegen,
@@ -107,7 +108,8 @@ def test_partial_aggregation_before_shuffle(spark):
 
 def test_ivf_search_prunes_partitions(spark, tmp_path):
     """A materialized IVF index scan carries a real cluster_id partition
-    filter at probe time — the index's entire point at 100 TB."""
+    filter at probe time — the index's entire point at 100 TB. ``search``
+    evaluates at call time, so the plan checked is the top-k plan it ran."""
     from oracle_vectorsearch_example_spark.operators.ivf import IvfIndex
 
     emb = read_table(spark, SF, "embeddings")
@@ -115,7 +117,8 @@ def test_ivf_search_prunes_partitions(spark, tmp_path):
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
     )
     idx = IvfIndex.build(emb, seed=42, path=str(tmp_path / "ivf"))
-    plan = explain_str(idx.search(q, k=5, nprobe=4))
+    plans = executed_plans(spark, lambda: idx.search(q, k=5, nprobe=4))
+    (plan,) = [pl for pl in plans if "MapInArrow topk" in pl]
     m = re.search(r"PartitionFilters: \[([^\]]*)\]", plan)
     assert m and ("cluster_id" in m.group(1)) and (
         "IN" in m.group(1).upper() or "in(" in m.group(1).lower()
@@ -185,15 +188,21 @@ def _search_plans():
 @pytest.mark.parametrize("name", sorted(_search_plans()))
 def test_vector_search_plans_are_one_arrow_topk(vector_indexes, name):
     """Every vector-search path runs on the shared Arrow top-k kernel: one
-    Python map-in-Arrow ``topk`` stage per top-k in the plan and no
-    pandas map stage (``search_df``'s query-side cluster assignment is
-    its one other Arrow stage)."""
+    Python map-in-Arrow ``topk`` stage per top-k in the plans that run and
+    no pandas map stage (``search_df``'s query-side cluster assignment is
+    its one other Arrow stage). The paths that collect their queries merge
+    on the driver and evaluate at call time, so the plans checked are the
+    ones the search and a collect of its result execute; only the
+    distributed ``search_df`` merges in a window."""
     n_topk, build = _search_plans()[name]
-    plan = explain_str(build(vector_indexes), mode="simple")
+    spark = vector_indexes["emb"].sparkSession
+    plans = executed_plans(spark, lambda: build(vector_indexes).collect())
+    plan = "\n".join(plans)
     assert "MapInPandas" not in plan, plan
     udfs = re.findall(r"MapInArrow (\w+)\(", plan)
     assert udfs.count("topk") == n_topk, plan
     assert set(udfs) <= {"topk", "assign_probes"}, plan
+    assert bool(re.search(r"\bWindow \[", plan)) == (name == "ivf_search_df"), plan
 
 
 def test_sessionize_is_single_shuffle(spark):

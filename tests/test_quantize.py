@@ -89,7 +89,7 @@ def test_sq8_ivf_search_recall_and_pruning(spark, tmp_path):
         sq8_encode_index,
         sq8_ivf_search,
     )
-    from oracle_vectorsearch_example_spark.plans.inspect import explain_str
+    from oracle_vectorsearch_example_spark.plans.inspect import executed_plans
 
     base = generate_ann_vectors(
         spark, n=2000, dim=16, n_centers=200, noise=0.1, seed=7
@@ -109,10 +109,12 @@ def test_sq8_ivf_search_recall_and_pruning(spark, tmp_path):
     recall = sum(len(ex[k_] & ap[k_]) for k_ in ex) / sum(len(ex[k_]) for k_ in ex)
     assert recall >= 0.9, recall
 
-    # partition pruning reaches the code-table scan
-    plan = explain_str(
-        sq8_ivf_search(idx, codes, q, k=10, nprobe=2, exclude_self=True)
+    # partition pruning reaches the code-table scan of the top-k plan the
+    # search runs at call time
+    plans = executed_plans(
+        spark, lambda: sq8_ivf_search(idx, codes, q, k=10, nprobe=2, exclude_self=True)
     )
+    (plan,) = [pl for pl in plans if "MapInArrow topk" in pl]
     import re as _re
 
     m = _re.search(r"PartitionFilters: \[([^\]]*)\]", plan)
@@ -227,7 +229,7 @@ def test_pq_ivf_search_recall_pruning_and_exhaustive(spark, tmp_path):
         pq_topk_search,
         pq_train,
     )
-    from oracle_vectorsearch_example_spark.plans.inspect import explain_str
+    from oracle_vectorsearch_example_spark.plans.inspect import executed_plans
 
     base = generate_ann_vectors(
         spark, n=2000, dim=16, n_centers=200, noise=0.1, seed=7
@@ -255,11 +257,14 @@ def test_pq_ivf_search_recall_pruning_and_exhaustive(spark, tmp_path):
     recall = sum(len(ex[k_] & ap[k_]) for k_ in ex) / sum(len(ex[k_]) for k_ in ex)
     assert recall >= 0.9, recall
 
-    # partition pruning reaches the PQ-table scan
-    plan = explain_str(
-        pq_ivf_search(idx, pq_codes, sq8, q, books, k=10, nprobe=2,
-                      exclude_self=True)
+    # partition pruning reaches the PQ-table scan: the first of the two
+    # top-k plans the search runs at call time (the SQ8 refine is second)
+    plans = executed_plans(
+        spark,
+        lambda: pq_ivf_search(idx, pq_codes, sq8, q, books, k=10, nprobe=2,
+                              exclude_self=True),
     )
+    plan, _ = [pl for pl in plans if "MapInArrow topk" in pl]
     import re as _re
 
     m = _re.search(r"PartitionFilters: \[([^\]]*)\]", plan)

@@ -18,6 +18,8 @@ from oracle_vectorsearch_example_spark.operators.search import (
     cosine_neardup_pairs_sparse,
     topk_search,
 )
+from oracle_vectorsearch_example_spark.plans.inspect import executed_plans
+from oracle_vectorsearch_example_spark.plans.inspect import spark_jobs as _jobs
 from oracle_vectorsearch_example_spark.sources.io import read_table
 from oracle_vectorsearch_example_spark.sources.txn import Warehouse
 
@@ -72,14 +74,16 @@ def test_topk_impls_agree(emb, queries10):
 def test_arrow_topk_rank_topk_match_brute_force(
     spark, metric, n, k, exclude_self, parts, zero_query
 ):
-    """The shared kernel (per-partition ``arrow_topk`` + the one
-    ``rank_topk`` merge) returns exactly the numpy brute force: per query
-    the k smallest distances, ties broken by id, self pairs dropped."""
+    """The shared kernel (per-partition ``arrow_topk``, then either merge:
+    the distributed ``rank_topk`` window or the driver-side
+    ``collect_topk``) returns exactly the numpy brute force: per query the
+    k smallest distances, ties broken by id, self pairs dropped."""
     import numpy as np
 
     from oracle_vectorsearch_example_spark.functions.vectors import (
         arrow_list_matrix,
         arrow_topk,
+        collect_topk,
         pairs,
         rank_topk,
     )
@@ -114,13 +118,6 @@ def test_arrow_topk_rank_topk_match_brute_force(
         yield pairs(qids, bids, dist(qmat, arrow_list_matrix(rb.column(1))))
 
     dist_type = "long" if metric == "hamming" else "double"
-    got = [
-        tuple(r)
-        for r in rank_topk(
-            arrow_topk(base, score, k, exclude_self, dist_type=dist_type),
-            k, "qid", "vec_id",
-        ).orderBy("qid", "rank").collect()
-    ]
     full = dist(qmat, vecs)
     want = []
     for qi in np.argsort(qids):
@@ -128,12 +125,54 @@ def test_arrow_topk_rank_topk_match_brute_force(
         order = np.lexsort((ids[keep], full[qi][keep]))[:k]
         for rank, j in enumerate(order, 1):
             want.append((int(qids[qi]), rank, int(ids[keep][j]), full[qi][keep][j].item()))
-    assert got == want
-    assert len(got) == len(qids) * min(k, n - exclude_self)
-    if metric == "hamming":
-        assert all(type(r[3]) is int for r in got)
-    if zero_query:
-        assert all(r[3] == 1.0 for r in got if r[0] == qids[0])
+    schemas = set()
+    for merge in (rank_topk, collect_topk):
+        ranked = merge(
+            arrow_topk(base, score, k, exclude_self, dist_type=dist_type),
+            k, "qid", "vec_id",
+        )
+        schemas.add(tuple((f.name, f.dataType) for f in ranked.schema))
+        got = [tuple(r) for r in ranked.orderBy("qid", "rank").collect()]
+        assert got == want, merge.__name__
+        assert len(got) == len(qids) * min(k, n - exclude_self)
+        if metric == "hamming":
+            assert all(type(r[3]) is int for r in got)
+        if zero_query:
+            assert all(r[3] == 1.0 for r in got if r[0] == qids[0])
+    assert len(schemas) == 1, schemas  # same column names and types
+
+
+def test_collect_topk_nothing_qualifies_is_typed_and_empty(spark):
+    """When no row qualifies, the driver-side merge returns an empty frame
+    with the same column names and types as ``rank_topk``'s, for both
+    distance types, and collecting it runs no Spark job."""
+    import numpy as np
+
+    from oracle_vectorsearch_example_spark.functions.vectors import (
+        arrow_topk,
+        collect_topk,
+        pairs,
+        rank_topk,
+    )
+
+    base = spark.createDataFrame(
+        [(1, [1.0]), (2, [2.0])], "vec_id long, embedding array<double>"
+    )
+
+    def score(rb):  # a predicate that nothing passes: no candidate at all
+        bids = rb.column(0).to_numpy(zero_copy_only=False).astype(np.int64)
+        yield pairs(np.zeros(0, np.int64), bids, np.zeros((0, len(bids))))
+
+    for dist_type in ("double", "long"):
+        scored = arrow_topk(base, score, 3, dist_type=dist_type)
+        want = rank_topk(scored, 3, "qid", "vec_id", dist_name="d")
+        got = collect_topk(scored, 3, "qid", "vec_id", dist_name="d")
+        assert [(f.name, f.dataType) for f in got.schema] == [
+            (f.name, f.dataType) for f in want.schema
+        ]
+        assert want.collect() == []
+        assert _jobs(spark, lambda: got.collect()) == 0
+        assert got.collect() == []
 
 
 def test_topk_partition_skips_empty_batches_and_blocks():
@@ -275,16 +314,17 @@ def test_search_df_recall_and_agreement(emb, queries10):
 
 def test_search_df_no_driver_collect(emb, queries10):
     """The whole point of search_df: the query frame never lands on the
-    driver — queries flow scan → mapInPandas assign → join → mapInPandas
+    driver — queries flow scan → mapInArrow assign → join → mapInArrow
     re-rank, so the plan contains no driver-materialized leaf
-    (LocalTableScan / Scan ExistingRDD). search()'s plan, by contrast,
-    carries the driver-computed probe set as a LITERAL cluster_id IN
-    filter — proof the query frame was collected."""
+    (LocalTableScan / Scan ExistingRDD). The top-k plan search() runs, by
+    contrast, carries the driver-computed probe set as a LITERAL
+    cluster_id IN filter — proof the query frame was collected."""
     idx = IvfIndex.build(emb, n_clusters=8, seed=42)
     plan = idx.search_df(queries10, k=5, nprobe=4)._jdf.queryExecution().executedPlan().toString()
     assert "LocalTableScan" not in plan and "ExistingRDD" not in plan, plan
     assert "cluster_id IN" not in plan and "cluster_id#" in plan
-    old = idx.search(queries10, k=5, nprobe=4)._jdf.queryExecution().executedPlan().toString()
+    plans = executed_plans(emb.sparkSession, lambda: idx.search(queries10, k=5, nprobe=4))
+    (old,) = [pl for pl in plans if "MapInArrow topk" in pl]
     assert " IN (" in old or "cluster_id IN" in old, old  # the contrast
 
 
@@ -625,9 +665,8 @@ def test_ivf_compact_folds_add_dirs(spark, tmp_path):
     assert reopened.assignments.count() == emb.count()
     import re as _re
 
-    from oracle_vectorsearch_example_spark.plans.inspect import explain_str
-
-    plan = explain_str(reopened.search(q, k=5, nprobe=4))
+    plans = executed_plans(spark, lambda: reopened.search(q, k=5, nprobe=4))
+    (plan,) = [pl for pl in plans if "MapInArrow topk" in pl]
     m = _re.search(r"PartitionFilters: \[([^\]]*)\]", plan)
     assert m and "cluster_id" in m.group(1), plan
     # compacting a single-dir index is a no-op
@@ -643,9 +682,10 @@ def test_ivf_compact_folds_add_dirs(spark, tmp_path):
 
 
 def test_lsh_save_load_roundtrip(spark, tmp_path, emb, queries10):
-    """LSH persistence (r4, IvfIndex-parity): save writes data/ (bucket
-    table partitioned by table) + planes.json; load reopens from the
-    path alone and searches identically — both search() and search_df."""
+    """LSH persistence (r4, IvfIndex-parity): save publishes the bucket
+    table (partitioned by table) and the hyperplanes through the path's
+    Warehouse manifest log; load reopens from the path alone and searches
+    identically — both search() and search_df."""
     from oracle_vectorsearch_example_spark.operators.lsh_ann import CosineLshIndex
 
     idx = CosineLshIndex.build(emb, dim=64, n_tables=8, n_bits=4, seed=42)
@@ -789,16 +829,15 @@ def test_topk_predicate_accepts_sql_string(emb, queries10):
 
 def test_topk_predicate_pushed_to_scan(spark, queries10, tmp_path):
     """The predicate must reach the parquet scan as a PushedFilter —
-    filtering after the read would scan every row at 100 TB."""
+    filtering after the read would scan every row at 100 TB. The plan
+    checked is the top-k plan ``topk_search`` runs at call time."""
     p = str(tmp_path / "embp")
     read_table(spark, SF, "embeddings").write.parquet(p)
     base = spark.read.parquet(p)
-    plan = (
-        topk_search(base, queries10, k=5, predicate=F.col("label") == 1)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
+    plans = executed_plans(
+        spark, lambda: topk_search(base, queries10, k=5, predicate=F.col("label") == 1)
     )
+    (plan,) = [pl for pl in plans if "MapInArrow topk" in pl]
     pushed = plan.split("PushedFilters", 1)[1][:200]
     assert "label" in pushed, plan
 
@@ -833,20 +872,90 @@ def test_ivf_search_predicate_matches_filtered_exact(emb, queries10, tmp_path):
 
 def test_ivf_search_predicate_inside_pruned_scan_plan(emb, queries10, tmp_path):
     """Both prunings in ONE scan: cluster_id as PartitionFilters AND the
-    payload predicate as PushedFilters."""
+    payload predicate as PushedFilters, in the top-k plan ``search`` runs
+    at call time."""
     idx = IvfIndex.build(
         emb, n_clusters=8, seed=42, path=str(tmp_path / "ivf"), payload_cols=["label"]
     )
-    plan = (
-        idx.search(queries10, k=5, nprobe=2, predicate=F.col("label") == 1)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
+    plans = executed_plans(
+        emb.sparkSession,
+        lambda: idx.search(queries10, k=5, nprobe=2, predicate=F.col("label") == 1),
     )
+    (plan,) = [pl for pl in plans if "MapInArrow topk" in pl]
     part = plan.split("PartitionFilters", 1)[1][:300]
     assert "cluster_id" in part, plan
     pushed = plan.split("PushedFilters", 1)[1][:300]
     assert "label" in pushed, plan
+
+
+def _scanned_and_local_queries(emb, n=16):
+    """The same query batch twice: a frame over the embeddings table, whose
+    collect is a Spark job, and its ``query_frame`` local relation, whose
+    collect is none."""
+    from oracle_vectorsearch_example_spark.functions.vectors import (
+        collect_queries,
+        query_frame,
+    )
+
+    scanned = emb.filter(F.col("vec_id") < n).select(
+        F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
+    )
+    qids, qmat = collect_queries(scanned, "qid", "qvec")
+    return scanned, query_frame(emb.sparkSession, qids, qmat)
+
+
+def test_collecting_searches_run_one_job(emb, tmp_path):
+    """On a local-relation query frame, ``topk_search`` and
+    ``IvfIndex.search`` (with and without a predicate) each run exactly one
+    Spark job, the top-k scan: the candidates merge on the driver, so
+    collecting the result runs none. ``search_df`` stays lazy and
+    distributed: building it runs no job, not even from a query frame
+    whose collect would cost one."""
+    spark = emb.sparkSession
+    idx = IvfIndex.build(
+        emb, n_clusters=8, seed=42, path=str(tmp_path / "ivf"), payload_cols=["label"]
+    )
+    scanned, local = _scanned_and_local_queries(emb)
+    assert _jobs(spark, local.collect) == 0
+    searches = {
+        "topk_search": lambda q: topk_search(emb, q, k=5),
+        "ivf_search": lambda q: idx.search(q, k=5, nprobe=2),
+        "ivf_search_filtered": lambda q: idx.search(q, k=5, nprobe=2, predicate="label = 1"),
+    }
+    for name, run in searches.items():
+        out = []
+        assert _jobs(spark, lambda: out.append(run(local))) == 1, name
+        assert _jobs(spark, out[0].collect) == 0, name
+        assert out[0].collect() == run(scanned).collect(), name
+    assert _jobs(spark, lambda: idx.search_df(scanned, k=5, nprobe=2)) == 0
+
+
+def test_query_frame_collected_once(emb, tmp_path):
+    """``pq_ivf_search`` hands its SQ8 refine the queries it already
+    collected, and ``calibrate`` / ``accuracy_report`` hand them to their
+    exact pass: a query frame whose collect costs a Spark job costs
+    exactly one job more than its local relation."""
+    from oracle_vectorsearch_example_spark.operators.quantize import (
+        pq_encode_index,
+        pq_ivf_search,
+        pq_train,
+        sq8_encode_index,
+    )
+
+    spark = emb.sparkSession
+    idx = IvfIndex.build(emb, n_clusters=8, seed=42, path=str(tmp_path / "ivf"))
+    books = pq_train(emb, m=8, k=16, seed=42)
+    pq = pq_encode_index(idx, books, path=str(tmp_path / "pq"))
+    sq8 = sq8_encode_index(idx, path=str(tmp_path / "sq8"))
+    scanned, local = _scanned_and_local_queries(emb)
+    runs = {
+        "pq_ivf_search": lambda q: pq_ivf_search(idx, pq, sq8, q, books, k=5, nprobe=2),
+        "calibrate": lambda q: idx.calibrate(q, k=5),
+        "accuracy_report": lambda q: idx.accuracy_report(q, k=5),
+    }
+    for name, run in runs.items():
+        local_jobs = _jobs(spark, lambda: run(local))
+        assert _jobs(spark, lambda: run(scanned)) == local_jobs + 1, name
 
 
 def test_ivf_search_df_predicate(emb, queries10):
